@@ -310,7 +310,9 @@ object Http2Mux {
         if (done && pos >= buf.length) -1
         else { val b = buf(pos) & 0xff; pos += 1; b }
       }
+      // zero-length reads return at once, as in Http2Wire.dataStream
       override def read(b: Array[Byte], off: Int, len: Int): Int = {
+        if (len == 0) return 0
         pull()
         if (done && pos >= buf.length) return -1
         val n = math.min(len, buf.length - pos)

@@ -658,7 +658,11 @@ object Http2Wire {
           if (pos >= buf.length) -1
           else { val b = buf(pos) & 0xff; pos += 1; b }
         }
+        // a zero-length read returns at once (the InputStream contract):
+        // readNBytes issues one after every complete message, and pulling
+        // there would hold that message until the next DATA frame arrives
         override def read(b: Array[Byte], off: Int, len: Int): Int = {
+          if (len == 0) return 0
           pull()
           if (pos >= buf.length) return -1
           val n = math.min(len, buf.length - pos)

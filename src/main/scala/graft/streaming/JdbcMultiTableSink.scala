@@ -89,7 +89,9 @@ object JdbcUpsertDialect {
   *
   *   1. delete-own-batch across ALL fact tables — one driver connection,
   *      one transaction;
-  *   2. append every fact frame (distributed, parallel per table);
+  *   2. append every fact frame — distributed, and the tables at the same
+  *      time ([[CommitLegs]]): step 2 starts only after step 1 commits, and
+  *      step 3 only after every append has finished;
   *   3. write the cursor row LAST, in its own single-statement transaction.
   *
   * The cursor is the commit marker: it advances only after every fact table
@@ -143,21 +145,28 @@ final class JdbcMultiTableSink(
       conn.commit()
     }
 
-    // 2. distributed appends — replay-safe because step 1 reruns first
-    tables.foreach { t =>
+    // 2. distributed appends, one leg per table, all at once — replay-safe
+    // because step 1 reruns first
+    CommitLegs.runAll(frames.head._2.sparkSession, tables.map { t => () =>
       frames(t).withColumn("batch_id", lit(batchId))
         .write.mode("append").jdbc(url, t, connectionProperties)
-    }
+    })
 
     // 3. the commit marker, last: batch is now fully present everywhere.
     // One dialect-selected upsert statement (the reference's writeCursor
     // shape, dao.ts:1840-1851) — atomic on its own, no delete window.
     withConnection { conn =>
-      ensureCursorTable(conn)
+      if (!cursorCreated) { ensureCursorTable(conn); cursorCreated = true }
       executeIgnoringMissing(conn,
         dialect.cursorUpsert(cursorTable, batchId, endBlock))
     }
   }
+
+  /** Set once this instance has created (or found) the cursor table, so a
+    * batch does not re-issue the CREATE: on Postgres each repeat fails with
+    * 42P07 and logs a server-side ERROR. Readers ([[cursor]],
+    * [[repairAfterRestart]], [[retract]]) tolerate a missing table. */
+  @volatile private var cursorCreated = false
 
   /** Dimension upsert — the other half of the reference's upsert surface
     * (`insertPoolKeyHash`, dao.ts:1869-1893: `INSERT ... ON CONFLICT DO

@@ -2,12 +2,12 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ingest.Ingest
-import graft.sources.v2.BlockFeedProvider.{ControlCol, InvalidateFromCol}
+import graft.sources.v2.BlockFeedProvider.{ControlCol, ControlInvalidate, InvalidateFromCol}
 
 /** Streaming ingestion driver mirroring the reference's lifecycle
   * (index.ts:127-287, SURVEY.md §2.10):
@@ -30,8 +30,17 @@ import graft.sources.v2.BlockFeedProvider.{ControlCol, InvalidateFromCol}
   *    column, are processed and served operationally but never committed as
   *    canonical (T4, index.ts:137,243-246): they live in a side store that
   *    each batch replaces, the finalized re-emission supersedes them without
-  *    a reorg, and restarts/retracts drop the store (the source re-emits the
-  *    head because the cursor never advanced past it).
+  *    a reorg (within one batch too: a pending row whose block the batch
+  *    also accepts never reaches the store), and restarts/retracts drop the
+  *    store (the source re-emits the head because the cursor never advanced
+  *    past it).
+  *
+  *  - a micro-batch reads its source once (one persisted input, one
+  *    aggregate) and then commits through three legs at the same time: the
+  *    fact parquet write, the relational leg and the pending-store replace.
+  *    What stays ordered: dims, then facts, then cursor inside the
+  *    relational leg; all legs, then the operational refresh, then the
+  *    analytical hook (see [[processBatch]]).
   *
   * Event-time watermarks/session windows are deliberately absent: blockchain
   * order is total, and "late data" manifests only as reorgs (T8).
@@ -102,6 +111,21 @@ final class StreamDriver(
   /** One per-block-batch transaction (index.ts:195-257): derive event ids,
     * append facts idempotently, then run the refresh tiers.
     *
+    * One source scan: the input batch is persisted once, and one aggregate
+    * over it ([[summarize]]) answers every question the batch asks of
+    * itself — control or data, the invalidate boundary, the cursor's end
+    * block, the pending rows that survive. Every leg and the refresh then
+    * read the cache.
+    *
+    * Concurrent legs ([[CommitLegs]]): after the aggregate, three
+    * independent writes run at the same time — the fact parquet write, the
+    * relational leg (`JdbcBatchSink`, then `JdbcMultiTableSink`, ordered
+    * inside: dims, then facts, then cursor) and the pending-store replace.
+    * All legs finish before the operational refresh, and the refresh before
+    * the analytical hook; a failed leg fails the batch only after every
+    * other leg has stopped, so no refresh ever sees a half-written batch and
+    * the checkpoint replay reruns all three (each is idempotent).
+    *
     * Idempotency is scoped to the batch: partitions are
     * `batch_id=N/block_bucket=M`, so a checkpoint replay of batch N
     * dynamically overwrites ONLY its own partitions (exactly-once, T1)
@@ -124,48 +148,56 @@ final class StreamDriver(
     // at the first batch newer than the compaction ledger.
     if (batchId < compactedUpTo) return
 
-    // Control batches (the reference's invalidate/heartbeat dispatch arms,
-    // index.ts:142-287, carried in-band by the graft-blocks connector):
-    // the connector guarantees a control marker rides ALONE in its
-    // micro-batch, so a batch containing control rows has no data to
-    // ingest — an invalidate runs the retraction inline (the stream stays
-    // up; micro-batches are sequential, so the quiesced-only requirement
-    // holds by construction), a heartbeat is pure liveness (its one input
-    // row refreshes LivenessMonitor's progress clock; nothing to store).
-    // A checkpoint replay of an invalidate batch re-runs the retract,
-    // which is idempotent — and Spark replays at most the LAST uncommitted
-    // batch, so no post-reorg batch can have committed before the replay.
-    if (batch.columns.contains(ControlCol)) {
-      // driver-side collect is marker-count-sized (one row per control
-      // chunk, one control chunk per batch) — legitimate
-      val markers = batch.filter(col(ControlCol).isNotNull)
-        .select(col(ControlCol), col(InvalidateFromCol)).collect()
-      if (markers.nonEmpty) {
-        require(batch.filter(col(ControlCol).isNull).isEmpty,
-          s"batch $batchId mixes control markers with data rows — the " +
-            "source must emit markers in their own micro-batch")
-        val invalidateFrom: Seq[Long] = markers.toSeq.collect {
-          case r if r.getString(0) == graft.sources.v2.BlockFeedProvider.ControlInvalidate =>
-            r.getLong(1)
-        }
-        if (invalidateFrom.nonEmpty) {
-          retract(invalidateFrom.min)
+    val cutoff = retractCutoffFor(batchId)
+    // the finally must cover EVERY consumer: a transient failure in any leg
+    // (parquet write, JDBC outage, pending-store write) would otherwise
+    // strand the batch-sized cache in the CacheManager for the session's
+    // lifetime, one leak per failed-and-replayed batch
+    val input = batch.persist()
+    try {
+      val s = summarize(input, cutoff)
+
+      // Control batches (the reference's invalidate/heartbeat dispatch arms,
+      // index.ts:142-287, carried in-band by the graft-blocks connector):
+      // the connector guarantees a control marker rides ALONE in its
+      // micro-batch, so a batch containing control rows has no data to
+      // ingest — an invalidate runs the retraction inline (the stream stays
+      // up; micro-batches are sequential, so the quiesced-only requirement
+      // holds by construction), a heartbeat is pure liveness (its one input
+      // row refreshes LivenessMonitor's progress clock; nothing to store).
+      // A checkpoint replay of an invalidate batch re-runs the retract,
+      // which is idempotent — and Spark replays at most the LAST uncommitted
+      // batch, so no post-reorg batch can have committed before the replay.
+      if (s.controlRows > 0) {
+        require(s.dataRows == 0, s"batch $batchId mixes control markers with data rows — " +
+          "the source must emit markers in their own micro-batch")
+        s.invalidateFrom.foreach { fromBlock =>
+          retract(fromBlock)
           // poke operational consumers after a retraction (the reference
           // pushes the invalidation downstream); heartbeats change nothing
           onOperationalRefresh(spark.emptyDataFrame)
         }
-        return
-      }
-    }
-    val dataBatch =
-      if (batch.columns.contains(ControlCol))
-        batch.drop(ControlCol, InvalidateFromCol)
-      else batch
+      } else commitData(input, batchId, cutoff, s)
+    } finally input.unpersist()
+  }
 
+  /** The data arm of [[processBatch]]: the concurrent legs, then the
+    * refresh tiers. Every frame here derives from the cached `input`. */
+  private def commitData(input: DataFrame, batchId: Long, cutoff: Option[Long],
+      s: StreamDriver.BatchSummary): Unit = {
     // a row without a block number can neither be keyed nor retracted (it
     // would land in the __HIVE_DEFAULT_PARTITION__ bucket, outside every
-    // reorg predicate) — malformed input, dropped at the boundary
-    val valid = dataBatch.filter(col("block_number").isNotNull)
+    // reorg predicate) — malformed input, dropped at the boundary. The
+    // retract-ledger replay guard applies to pending rows too: a checkpoint
+    // replay of a pre-reorg batch must not repopulate the pending store
+    // (and the operational view) with retracted blocks.
+    def keyed(rows: Column): DataFrame = {
+      val k = input.filter(col("block_number").isNotNull && rows)
+        .drop(ControlCol, InvalidateFromCol, "is_pending")
+        .withColumn("event_id",
+          Ingest.eventId(col("block_number"), col("transaction_index"), col("event_index")))
+      cutoff.map(c => k.filter(col("block_number") < c)).getOrElse(k)
+    }
 
     // T4: a batch may carry PENDING (unfinalized head) rows, flagged by an
     // optional `is_pending` column (index.ts:137). They are processed —
@@ -173,28 +205,15 @@ final class StreamDriver(
     // canonical: they land in the pending store, which each batch replaces
     // wholesale (the pending head is whatever THIS batch says it is; the
     // finalized re-emission of the same block arrives later as a normal
-    // canonical row, so the swap needs no reorg).
-    val hasPending = valid.columns.contains("is_pending")
-    val isPending = coalesce(col("is_pending").cast("boolean"), lit(false))
-    val canonical = if (hasPending) valid.filter(!isPending).drop("is_pending") else valid
-    val pending = if (hasPending) Some(valid.filter(isPending).drop("is_pending")) else None
+    // canonical row, so the swap needs no reorg). A pending row whose
+    // block this same batch also accepts is already superseded and never
+    // reaches the store.
+    val canonical = keyed(!isPending(input))
+    val pending = Option.when(s.pendingBlocks.nonEmpty)(
+      keyed(isPending(input) && col("block_number").isin(s.pendingBlocks: _*)))
 
-    val keyed = canonical.withColumn("event_id",
-      Ingest.eventId(col("block_number"), col("transaction_index"), col("event_index")))
-
-    val cutoff = retractCutoffFor(batchId)
-    // persisted for the batch: the parquet write, the JDBC leg, and the
-    // multi-table leg (cursor collect + one append per routed fact table —
-    // ~25 consumers at the reference's table count) would otherwise each
-    // re-execute the read + filter pipeline from source
-    val replaySafe = cutoff.map(c => keyed.filter(col("block_number") < c)).getOrElse(keyed)
-      .persist()
-    // the finally must cover EVERY consumer: a transient failure in any leg
-    // (parquet write, JDBC outage, pending-store write) would otherwise
-    // strand the batch-sized cache in the CacheManager for the session's
-    // lifetime, one leak per failed-and-replayed batch
-    try {
-      withBlockBucket(replaySafe)
+    val factLeg = () =>
+      withBlockBucket(canonical)
         .withColumn("batch_id", lit(batchId))
         .write
         .mode("overwrite")
@@ -202,61 +221,73 @@ final class StreamDriver(
         .partitionBy("batch_id", "block_bucket")
         .parquet(s"$factRoot/raw_events")
 
-      // relational leg (BASELINE's "JDBC sink to Postgres"): canonical rows
-      // only — the pending head stays in its replaceable side store
-      jdbcSink.foreach(_.write(replaySafe, batchId))
-
-      // multi-table relational leg: route the batch into per-processor fact
-      // frames (the reference DAO's ~24 tables, dao.ts:1895-2893) and write
-      // them with the cursor-as-commit-marker protocol. The 1-row max-block
-      // aggregate is the cursor read — a legitimate driver-side collect.
-      // replaySafe is persisted above: at the reference's table count this
-      // leg alone re-reads the batch ~25× otherwise.
-      multiTableSink.foreach { case (sink, route) =>
-        val endBlock = replaySafe.agg(max(col("block_number"))).collect().head
-        if (!endBlock.isNullAt(0)) { // an all-filtered replay batch moves no cursor
-          // dimension legs FIRST (the reference inserts pool_keys rows as it
-          // meets them, before the cursor advance, dao.ts:1869-1893): the
-          // database-side insert-ignore makes this idempotent under batch
-          // replay, so dims need no delete-own-batch protocol of their own —
-          // a dim row, once present, is correct forever (keys are
-          // content-addressed, never reorged)
-          multiTableDims.foreach { case (table, keyCols, derive) =>
-            sink.writeDim(table, derive(replaySafe), keyCols)
-          }
-          sink.write(route(replaySafe), batchId, endBlock.getLong(0))
+    // relational leg (BASELINE's "JDBC sink to Postgres"): canonical rows
+    // only — the pending head stays in its replaceable side store. The
+    // multi-table half routes the batch into per-processor fact frames (the
+    // reference DAO's ~24 tables, dao.ts:1895-2893) and writes them with the
+    // cursor-as-commit-marker protocol; an all-filtered replay batch has no
+    // end block and moves no cursor.
+    val relationalLeg = () => {
+      jdbcSink.foreach(_.write(canonical, batchId))
+      for ((sink, route) <- multiTableSink; endBlock <- s.endBlock) {
+        // dimension legs FIRST (the reference inserts pool_keys rows as it
+        // meets them, before the cursor advance, dao.ts:1869-1893): the
+        // database-side insert-ignore makes this idempotent under batch
+        // replay, so dims need no delete-own-batch protocol of their own —
+        // a dim row, once present, is correct forever (keys are
+        // content-addressed, never reorged)
+        multiTableDims.foreach { case (table, keyCols, derive) =>
+          sink.writeDim(table, derive(canonical), keyCols)
         }
+        sink.write(route(canonical), batchId, endBlock)
       }
+    }
 
-      val keyedPending = pending.map { p =>
-          // the retract-ledger replay guard applies to pending rows too: a
-          // checkpoint replay of a pre-reorg batch must not repopulate the
-          // pending store (and the operational view) with retracted blocks
-          val k = p.withColumn("event_id",
-            Ingest.eventId(col("block_number"), col("transaction_index"), col("event_index")))
-          cutoff.map(c => k.filter(col("block_number") < c)).getOrElse(k)
-        }
-        .flatMap { k =>
-          // one scan for the whole batch: isEmpty, the store write, and the
-          // operational union below all reuse the cached pending frame
-          k.persist()
-          try {
-            // the pending store is ALWAYS this batch's pending set — an
-            // empty one means the head is fully finalized, so the store
-            // empties too
-            if (k.isEmpty) { k.unpersist(); dropPending(); None }
-            else {
-              withBlockBucket(k).withColumn("batch_id", lit(PendingBatchId))
-                .write.mode("overwrite").parquet(pendingDir)
-              Some(k)
-            }
-          } catch { case t: Throwable => k.unpersist(); throw t }
-        }
+    // the pending store is ALWAYS this batch's pending set — an empty one
+    // means the head is fully finalized, so the store empties too
+    val pendingLeg = Option.when(input.columns.contains("is_pending"))(() =>
+      pending match {
+        case Some(p) =>
+          withBlockBucket(p).withColumn("batch_id", lit(PendingBatchId))
+            .write.mode("overwrite").parquet(pendingDir)
+        case None => dropPending()
+      })
 
-      try onOperationalRefresh(keyedPending.foldLeft(replaySafe)(_ unionByName _))
-      finally keyedPending.foreach(_.unpersist())
-      if (batchId % analyticalEvery == 0) onAnalyticalRefresh(batchId)
-    } finally replaySafe.unpersist()
+    CommitLegs.runAll(spark, Seq(factLeg, relationalLeg) ++ pendingLeg)
+
+    onOperationalRefresh(pending.foldLeft(canonical)(_ unionByName _))
+    if (batchId % analyticalEvery == 0) onAnalyticalRefresh(batchId)
+  }
+
+  /** The optional pending flag; a batch without the column is all canonical. */
+  private def isPending(df: DataFrame): Column =
+    if (df.columns.contains("is_pending")) coalesce(col("is_pending").cast("boolean"), lit(false))
+    else lit(false)
+
+  /** One global aggregate over the cached input, collected as one row. The
+    * per-partition sets of accepted and pending blocks meet on the executor
+    * side; only their differences — a few head blocks — reach the driver. */
+  private def summarize(input: DataFrame, cutoff: Option[Long]): StreamDriver.BatchSummary = {
+    val hasControl = input.columns.contains(ControlCol)
+    val control = if (hasControl) col(ControlCol).isNotNull else lit(false)
+    val invalidate =
+      if (hasControl) when(col(ControlCol) === ControlInvalidate, col(InvalidateFromCol))
+      else lit(null).cast("long")
+    val kept = col("block_number").isNotNull && !control &&
+      cutoff.map(c => col("block_number") < c).getOrElse(lit(true))
+    val pendingFlag = isPending(input)
+    val blocksWhere = (c: Column) => collect_set(when(c, col("block_number")))
+    val r = input
+      .agg(count_if(control).as("control"), count_if(!control).as("data"),
+        min(invalidate).as("invalidate"),
+        max(when(kept && !pendingFlag, col("block_number"))).as("end"),
+        blocksWhere(kept && pendingFlag).as("pending"),
+        blocksWhere(kept && !pendingFlag).as("accepted"))
+      .select(col("control"), col("data"), col("invalidate"), col("end"),
+        array_except(col("pending"), col("accepted")))
+      .head()
+    def long(i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(r.getLong(i))
+    StreamDriver.BatchSummary(r.getLong(0), r.getLong(1), long(2), long(3), r.getSeq[Long](4))
   }
 
   /** Canonical facts plus the pending head (T4): what an operational query
@@ -642,4 +673,16 @@ final class StreamDriver(
       fs.delete(tmpPath, true)
     }
   }
+}
+
+object StreamDriver {
+
+  /** What a batch needs to know about itself before it writes anything.
+    * `dataRows` counts every non-control row (the mixed-batch check).
+    * `endBlock` and `pendingBlocks` see only rows that pass the replay
+    * guard; `pendingBlocks` are the blocks the batch carries pending and
+    * does not also accept — the pending store's next content, empty when
+    * the head is fully finalized. */
+  private final case class BatchSummary(controlRows: Long, dataRows: Long,
+      invalidateFrom: Option[Long], endBlock: Option[Long], pendingBlocks: Seq[Long])
 }

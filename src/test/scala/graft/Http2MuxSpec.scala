@@ -127,6 +127,30 @@ class Http2MuxSpec extends AnyFunSuite {
     } finally srv.close()
   }
 
+  test("a message reaches the client on arrival, while the stream stays open") {
+    // the mux stream input must answer ProtoWire.readFrame's zero-length
+    // read at once, not wait for the stream's next event
+    val release = new CountDownLatch(1)
+    withPair { s =>
+      Http2Mux.serverLoop(s.getInputStream, s.getOutputStream) { (_, call) =>
+        call.send("head".getBytes("UTF-8"))
+        release.await(30, TimeUnit.SECONDS)
+        call.finish()
+      }
+      ()
+    } { sock =>
+      try {
+        val body = new Http2Mux.MuxClientConnection(sock.getInputStream, sock.getOutputStream)
+          .call("127.0.0.1", "subscribe".getBytes("UTF-8"))
+        val first = java.util.concurrent.CompletableFuture.supplyAsync(() => ProtoWire.readFrame(body))
+        val msg = first.get(1, TimeUnit.SECONDS)
+        assert(msg.map(new String(_, "UTF-8")).contains("head"))
+        release.countDown()
+        assert(ProtoWire.readFrame(body).isEmpty) // trailers end the stream
+      } finally release.countDown()
+    }
+  }
+
   test("sequential reuse still works on the mux client (ids 1, 3)") {
     withPair { s =>
       Http2Mux.serverLoop(s.getInputStream, s.getOutputStream) { (request, call) =>

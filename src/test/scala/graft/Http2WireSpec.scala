@@ -189,6 +189,35 @@ class Http2WireSpec extends AnyFunSuite {
     } finally srv.close()
   }
 
+  test("a message reaches the client on arrival, while the stream stays open") {
+    // ProtoWire.readFrame ends every message with a zero-length read; the
+    // data stream must answer it at once rather than wait for the next
+    // DATA frame — a pending head would otherwise sit on the wire until
+    // the block after it is sent
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val ss = new java.net.ServerSocket(0, 1, java.net.InetAddress.getLoopbackAddress)
+    val server = new Thread(() => {
+      val s = ss.accept()
+      try {
+        val (_, call) = serverAccept(s.getInputStream, s.getOutputStream)
+        call.send("head".getBytes("UTF-8"))
+        release.await(30, java.util.concurrent.TimeUnit.SECONDS)
+        call.finish()
+      } finally s.close()
+    }, "h2-arrival-server")
+    server.start()
+    val sock = new java.net.Socket("127.0.0.1", ss.getLocalPort)
+    try {
+      val body = new ClientConnection(sock.getInputStream, sock.getOutputStream)
+        .call("127.0.0.1", "subscribe".getBytes("UTF-8"))
+      val first = java.util.concurrent.CompletableFuture.supplyAsync(() => ProtoWire.readFrame(body))
+      val msg = first.get(1, java.util.concurrent.TimeUnit.SECONDS)
+      assert(msg.map(new String(_, "UTF-8")).contains("head"))
+      release.countDown()
+      assert(ProtoWire.readFrame(body).isEmpty) // trailers end the stream
+    } finally { release.countDown(); sock.close(); server.join(10000); ss.close() }
+  }
+
   test("h2c e2e: the reorg scenario drains identically over HTTP/2") {
     val root = SparkSpec.tempDir("graft-h2c-e2e").toString
     val script = BlockStreamScenario.chainWithReorg(blocks = 80L, reorgAt = 50L)

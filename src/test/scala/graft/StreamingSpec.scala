@@ -147,6 +147,41 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$root/facts/raw_events").count() == 11L)
   }
 
+  test("a batch holding a block both pending and accepted stores only the accepted copy (T4)") {
+    import spark.implicits._
+    val root = SparkSpec.tempDir("graft-streaming").toString
+    val rawDir = s"$root/raw"
+    Files.createDirectories(java.nio.file.Paths.get(rawDir))
+
+    val pendingSchema = StructType(schema.fields :+ StructField("is_pending", BooleanType))
+    var lastOperational: Option[org.apache.spark.sql.DataFrame] = None
+    val driver = new StreamDriver(spark, s"$root/facts", s"$root/ckpt",
+      onOperationalRefresh = df => lastOperational = Some(df))
+    def pendingBlocks() = driver.operationalEvents.filter($"batch_id" === driver.PendingBatchId)
+      .select($"block_number").collect().map(_.getLong(0)).toSeq
+
+    // one chunk, so one micro-batch: block 11 arrives pending, then accepted
+    ((1L to 10L).map(b => (b, 0L, 0L, false)) ++ Seq((11L, 0L, 0L, true), (11L, 0L, 0L, false)))
+      .toDF("block_number", "transaction_index", "event_index", "is_pending")
+      .write.mode("overwrite").parquet(s"$rawDir/chunk=1")
+    driver.start(s"$rawDir/*", pendingSchema, Trigger.AvailableNow()).awaitTermination()
+
+    assert(pendingBlocks().isEmpty, "the accepted copy supersedes the pending one")
+    assert(driver.operationalEvents.filter($"block_number" === 11L).count() == 1L)
+    assert(lastOperational.get.filter($"block_number" === 11L).count() == 1L)
+
+    // only the superseded block is dropped: block 13 stays the pending head
+    Seq((12L, 0L, 0L, true), (12L, 0L, 0L, false), (13L, 0L, 0L, true))
+      .toDF("block_number", "transaction_index", "event_index", "is_pending")
+      .write.mode("overwrite").parquet(s"$rawDir/chunk=2")
+    driver.start(s"$rawDir/*", pendingSchema, Trigger.AvailableNow()).awaitTermination()
+
+    assert(pendingBlocks() == Seq(13L))
+    val op = driver.operationalEvents
+    assert(op.count() == 13L)
+    assert(op.groupBy($"block_number").count().filter($"count" > 1).isEmpty)
+  }
+
   test("checkpoint replay after retract does not repopulate the pending store (T3 ∩ T4)") {
     import spark.implicits._
     val root = SparkSpec.tempDir("graft-streaming").toString
@@ -232,6 +267,106 @@ class StreamingSpec extends SparkSpec {
     assert(events.agg(max($"block_number")).collect().head.getLong(0) == 50L)
   }
 
+  test("a data batch opens its input partitions exactly once, whatever its legs") {
+    import spark.implicits._
+    val root = SparkSpec.tempDir("graft-streaming").toString
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Long, Long, Boolean)](numPartitions = 2)
+    // counts partition opens on the source side of the batch: a second
+    // scan anywhere (a probe, a leg, the refresh) would open them again
+    val opens = StreamingSpec.partitionOpens
+    opens.set(0)
+    val source = new graft.sources.BlockSource {
+      override def schema = StructType(StreamingSpec.this.schema.fields :+
+        StructField("is_pending", BooleanType))
+      override def stream(s: org.apache.spark.sql.SparkSession) =
+        mem.toDS().mapPartitions { rows => StreamingSpec.partitionOpens.incrementAndGet(); rows }
+          .toDF("block_number", "transaction_index", "event_index", "is_pending")
+    }
+
+    val url = s"jdbc:derby:$root/db;create=true"
+    val tables = Seq("once_even", "once_odd")
+    val route = (b: org.apache.spark.sql.DataFrame) => Map(
+      tables(0) -> b.filter($"block_number" % 2 === 0),
+      tables(1) -> b.filter($"block_number" % 2 === 1))
+    var refreshed = 0L
+    val driver = new StreamDriver(spark, s"$root/facts", s"$root/ckpt",
+      analyticalEvery = 1L,
+      onOperationalRefresh = df => refreshed = df.count(),
+      jdbcSink = Some(new graft.streaming.JdbcBatchSink(url, "once_events")),
+      multiTableSink = Some((new graft.streaming.JdbcMultiTableSink(url, tables), route)))
+
+    mem.addData((1L to 40L).map(b => (b, 0L, 0L, false)) :+ ((41L, 0L, 0L, true)))
+    driver.start(source, Trigger.AvailableNow()).awaitTermination()
+
+    assert(opens.get == 2, s"${opens.get} partition opens for a 2-partition batch")
+    assert(refreshed == 41L)
+    assert(spark.read.parquet(s"$root/facts/raw_events").count() == 40L)
+    assert(spark.read.jdbc(url, "once_events", new java.util.Properties).count() == 40L)
+    assert(driver.operationalEvents.count() == 41L)
+  }
+
+  test("a failing relational leg fails the batch, leaks no cache, and its replay converges") {
+    import spark.implicits._
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    val boom = new IllegalStateException("relational leg down")
+
+    // one driver over a Derby multi-table sink; `fail` makes the relational
+    // leg throw while the fact and pending legs still run beside it
+    def run(root: String, fail: Boolean) = {
+      val rawDir = s"$root/raw"
+      Files.createDirectories(java.nio.file.Paths.get(rawDir))
+      val url = s"jdbc:derby:$root/db;create=true"
+      val tables = Seq("leg_even", "leg_odd")
+      val sink = new graft.streaming.JdbcMultiTableSink(url, tables)
+      val route = (b: org.apache.spark.sql.DataFrame) => {
+        if (fail) throw boom
+        Map(tables(0) -> b.filter($"block_number" % 2 === 0),
+          tables(1) -> b.filter($"block_number" % 2 === 1))
+      }
+      val driver = new StreamDriver(spark, s"$root/facts", s"$root/ckpt",
+        multiTableSink = Some((sink, route)))
+      if (!Files.exists(java.nio.file.Paths.get(s"$rawDir/chunk=1")))
+        ((1L to 30L).map(b => (b, 0L, 0L, false)) :+ ((31L, 0L, 0L, true)))
+          .toDF("block_number", "transaction_index", "event_index", "is_pending")
+          .write.parquet(s"$rawDir/chunk=1")
+      val q = driver.start(s"$rawDir/*",
+        StructType(schema.fields :+ StructField("is_pending", BooleanType)), Trigger.AvailableNow())
+      (q, driver, sink, url, tables)
+    }
+    def state(root: String, driver: StreamDriver, sink: graft.streaming.JdbcMultiTableSink,
+        url: String, tables: Seq[String]) = (
+      spark.read.parquet(s"$root/facts/raw_events")
+        .select("block_number", "transaction_index", "event_index", "event_id")
+        .collect().map(_.toSeq).toSeq.sortBy(_.toString),
+      tables.map(t => spark.read.jdbc(url, t, new java.util.Properties)
+        .select("block_number", "batch_id").collect().map(_.toSeq).toSeq.sortBy(_.toString)),
+      sink.cursor(),
+      driver.operationalEvents.filter($"batch_id" === driver.PendingBatchId).count())
+
+    val cleanRoot = SparkSpec.tempDir("graft-streaming").toString
+    val (cq, cDriver, cSink, cUrl, cTables) = run(cleanRoot, fail = false)
+    cq.awaitTermination()
+    val clean = state(cleanRoot, cDriver, cSink, cUrl, cTables)
+    assert(clean._3.contains((0L, 30L)) && clean._4 == 1L)
+
+    spark.catalog.clearCache()
+    val root = SparkSpec.tempDir("graft-streaming").toString
+    val (q, _, _, _, _) = run(root, fail = true)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination())
+    val chain = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(_ eq boom), s"the leg's own exception surfaces: $chain")
+    assert(!chain.exists(_.isInstanceOf[java.util.concurrent.CompletionException]),
+      s"unwrapped: $chain")
+    assert(castToImpl(spark).sharedState.cacheManager.isEmpty, "the failed batch left its cache")
+
+    // the checkpoint replays the uncommitted batch 0 with a healthy sink
+    val (rq, rDriver, rSink, rUrl, rTables) = run(root, fail = false)
+    rq.awaitTermination()
+    assert(state(root, rDriver, rSink, rUrl, rTables) == clean)
+  }
+
   test("JDBC sink leg: idempotent batch writes, replay convergence, reorg deletes") {
     import spark.implicits._
     val root = SparkSpec.tempDir("graft-streaming").toString
@@ -282,4 +417,10 @@ class StreamingSpec extends SparkSpec {
     assert(upserted.count() == full.count())
     assert(upserted.exceptAll(full).isEmpty && full.exceptAll(upserted).isEmpty)
   }
+}
+
+object StreamingSpec {
+  /** Source-side partition opens, counted from executor tasks (the local
+    * master shares this JVM). */
+  val partitionOpens = new java.util.concurrent.atomic.AtomicInteger
 }
