@@ -284,7 +284,7 @@ object AnnIndex {
 
   /** Clone every published delta of `srcRoot` into `dstRoot` by hardlinking
     * the immutable artifact files (plain copy where the filesystem refuses
-    * links). Deltas are write-once — published by atomic rename, never
+    * links, or any link attempt fails with an I/O error). Deltas are write-once — published by atomic rename, never
     * mutated; compaction only ever unlinks a root's OWN directory entries
     * and writes fresh files — so a link-clone is an exact, isolated index
     * snapshot (the LSM-store clone every segment/delta store offers). The
@@ -301,7 +301,7 @@ object AnnIndex {
         if (f.isDirectory) link(f.toPath, d)
         else
           try { Files.createLink(d, f.toPath); () }
-          catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
+          catch { case _: UnsupportedOperationException | _: java.io.IOException =>
             Files.copy(f.toPath, d, StandardCopyOption.REPLACE_EXISTING); ()
           }
       }
@@ -896,9 +896,13 @@ object AnnIndex {
   }
 
   /** The vacuum: delete then COMPACT, so the tombstoned rows are
-    * physically gone from the folded base (the erasure guarantee — after
-    * the fold no artifact byte of the deleted vectors exists on disk;
-    * AnnIndexSpec pins it by reading the folded tables raw). Shares
+    * physically gone from the folded base (the erasure guarantee, scoped
+    * to this index root — after the fold no artifact under `vac`'s root
+    * holds a byte of the deleted vectors; AnnIndexSpec pins it by reading
+    * the folded tables raw). The root starts as a hardlink clone of the
+    * shared standing+append root ([[cloneDeltas]]), which still links the
+    * original files, so the bytes stay reachable on disk through that
+    * root until it is released too. Shares
     * [[annIvfPqDeletedOracle]] verbatim: physical removal must not move a
     * single ranked pair relative to the masked view. */
   def annIvfPqVacuumed(spark: SparkSession, sfDir: String): DataFrame = {

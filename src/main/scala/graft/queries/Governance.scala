@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -213,6 +213,9 @@ object Governance {
     val winRow = spark.table("blocks")
       .agg((min($"time") + startOff).as("w_start"), (max($"time") - endOff).as("w_end"))
       .head()
+    // no blocks, no window: nothing can be rewarded
+    if (winRow.isNullAt(0))
+      return spark.createDataFrame(java.util.Collections.emptyList[Row](), stakerRewardsSchema)
     val wStart = winRow.getLong(0)
     val wEnd = winRow.getLong(1)
     val totalDuration = wEnd - wStart
@@ -384,6 +387,12 @@ object Governance {
       floor($"tdr").cast(LongType).as("staker_portion"),
       floor($"tsr").cast(LongType).as("delegate_portion"))
   }
+
+  /** [[stakerRewards]]' output columns, declared for the empty result. */
+  private val stakerRewardsSchema = StructType(Seq(
+    StructField("id", LongType), StructField("claimee", StringType),
+    StructField("amount", LongType), StructField("staker_portion", LongType),
+    StructField("delegate_portion", LongType)))
 
   /** Fixed parameterization used by the verify/bench harness. */
   def stakerRewardsDefault(spark: SparkSession, sfDir: String): DataFrame =

@@ -16,8 +16,10 @@ import org.apache.spark.sql.functions._
   * dynamic partition overwrite: every row carries its `batch_id`, and a
   * batch write first deletes its own batch_id then appends. Delete + append
   * are not one transaction (the append runs distributed, one connection per
-  * partition), but a crash between them leaves a state the replay repairs —
-  * the delete runs again and the append re-inserts the full batch.
+  * partition of the batch frame — [[StreamDriver]] sizes that frame by its
+  * rows, so a live batch appends over one connection), but a crash between
+  * them leaves a state the replay repairs — the delete runs again and the
+  * append re-inserts the full batch.
   *
   * Reorg support (T3): [[retract]] deletes `block_number >= fromBlock`,
   * the JDBC analogue of the partition-pruned parquet rewrite (the reference

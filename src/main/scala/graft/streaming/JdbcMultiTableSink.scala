@@ -91,7 +91,11 @@ object JdbcUpsertDialect {
   *      one transaction;
   *   2. append every fact frame — distributed, and the tables at the same
   *      time ([[CommitLegs]]): step 2 starts only after step 1 commits, and
-  *      step 3 only after every append has finished;
+  *      step 3 only after every append has finished. Each append runs one
+  *      task, on its own connection, per partition of its frame;
+  *      [[StreamDriver]] sizes a batch's frames by its rows
+  *      ([[StreamDriver.RowsPerTask]]), so a live batch appends each table
+  *      over one connection;
   *   3. write the cursor row LAST, in its own single-statement transaction.
   *
   * The cursor is the commit marker: it advances only after every fact table

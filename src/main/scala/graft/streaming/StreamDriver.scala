@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -36,11 +37,12 @@ import graft.sources.v2.BlockFeedProvider.{ControlCol, ControlInvalidate, Invali
   *    past it).
   *
   *  - a micro-batch reads its source once (one persisted input, one
-  *    aggregate) and then commits through three legs at the same time: the
-  *    fact parquet write, the relational leg and the pending-store replace.
-  *    What stays ordered: dims, then facts, then cursor inside the
-  *    relational leg; all legs, then the operational refresh, then the
-  *    analytical hook (see [[processBatch]]).
+  *    Spark job that builds the cache and summarizes it) and then commits
+  *    through three legs at the same time, each with tasks sized to the
+  *    batch's rows: the fact parquet write, the relational leg and the
+  *    pending-store replace. What stays ordered: dims, then facts, then
+  *    cursor inside the relational leg; all legs, then the operational
+  *    refresh, then the analytical hook (see [[processBatch]]).
   *
   * Event-time watermarks/session windows are deliberately absent: blockchain
   * order is total, and "late data" manifests only as reorgs (T8).
@@ -111,13 +113,20 @@ final class StreamDriver(
   /** One per-block-batch transaction (index.ts:195-257): derive event ids,
     * append facts idempotently, then run the refresh tiers.
     *
-    * One source scan: the input batch is persisted once, and one aggregate
-    * over it ([[summarize]]) answers every question the batch asks of
-    * itself — control or data, the invalidate boundary, the cursor's end
-    * block, the pending rows that survive. Every leg and the refresh then
-    * read the cache.
+    * One source scan, one summary job: the input batch is persisted once,
+    * and one pass over it ([[summarize]]) both builds the cache and answers
+    * every question the batch asks of itself — control or data, the
+    * invalidate boundary, the cursor's end block, the pending rows that
+    * survive. Every leg and the refresh then read the cache.
     *
-    * Concurrent legs ([[CommitLegs]]): after the aggregate, three
+    * Legs sized by rows: every leg and the refresh read the cache through
+    * `coalesce(n)`, n = ⌈dataRows ÷ [[StreamDriver.RowsPerTask]]⌉ — a
+    * narrow merge of cached partitions, no shuffle and no second scan. A
+    * live batch of a few hundred rows then writes one parquet file per
+    * bucket, opens one connection per table and refreshes one partition;
+    * a backfill batch of thousands keeps several tasks.
+    *
+    * Concurrent legs ([[CommitLegs]]): after the summary, three
     * independent writes run at the same time — the fact parquet write, the
     * relational leg (`JdbcBatchSink`, then `JdbcMultiTableSink`, ordered
     * inside: dims, then facts, then cursor) and the pending-store replace.
@@ -182,9 +191,11 @@ final class StreamDriver(
   }
 
   /** The data arm of [[processBatch]]: the concurrent legs, then the
-    * refresh tiers. Every frame here derives from the cached `input`. */
+    * refresh tiers. Every frame here derives from the cached `input`,
+    * coalesced to the batch's size. */
   private def commitData(input: DataFrame, batchId: Long, cutoff: Option[Long],
       s: StreamDriver.BatchSummary): Unit = {
+    val sized = input.coalesce(StreamDriver.tasksFor(s.dataRows))
     // a row without a block number can neither be keyed nor retracted (it
     // would land in the __HIVE_DEFAULT_PARTITION__ bucket, outside every
     // reorg predicate) — malformed input, dropped at the boundary. The
@@ -192,7 +203,7 @@ final class StreamDriver(
     // replay of a pre-reorg batch must not repopulate the pending store
     // (and the operational view) with retracted blocks.
     def keyed(rows: Column): DataFrame = {
-      val k = input.filter(col("block_number").isNotNull && rows)
+      val k = sized.filter(col("block_number").isNotNull && rows)
         .drop(ControlCol, InvalidateFromCol, "is_pending")
         .withColumn("event_id",
           Ingest.eventId(col("block_number"), col("transaction_index"), col("event_index")))
@@ -208,9 +219,11 @@ final class StreamDriver(
     // canonical row, so the swap needs no reorg). A pending row whose
     // block this same batch also accepts is already superseded and never
     // reaches the store.
-    val canonical = keyed(!isPending(input))
-    val pending = Option.when(s.pendingBlocks.nonEmpty)(
-      keyed(isPending(input) && col("block_number").isin(s.pendingBlocks: _*)))
+    val canonicalRows = !isPending(input)
+    val pendingRows = Option.when(s.pendingBlocks.nonEmpty)(
+      isPending(input) && col("block_number").isin(s.pendingBlocks: _*))
+    val canonical = keyed(canonicalRows)
+    val pending = pendingRows.map(keyed)
 
     val factLeg = () =>
       withBlockBucket(canonical)
@@ -255,7 +268,9 @@ final class StreamDriver(
 
     CommitLegs.runAll(spark, Seq(factLeg, relationalLeg) ++ pendingLeg)
 
-    onOperationalRefresh(pending.foldLeft(canonical)(_ unionByName _))
+    // canonical rows and the surviving pending head, as one filter over the
+    // sized input (a union would double the refresh's partitions)
+    onOperationalRefresh(pendingRows.fold(canonical)(p => keyed(canonicalRows || p)))
     if (batchId % analyticalEvery == 0) onAnalyticalRefresh(batchId)
   }
 
@@ -264,30 +279,32 @@ final class StreamDriver(
     if (df.columns.contains("is_pending")) coalesce(col("is_pending").cast("boolean"), lit(false))
     else lit(false)
 
-  /** One global aggregate over the cached input, collected as one row. The
-    * per-partition sets of accepted and pending blocks meet on the executor
-    * side; only their differences — a few head blocks — reach the driver. */
+  /** One Spark job over the persisted input: the job that builds the cache
+    * also folds each partition into a [[StreamDriver.BatchSummary]], and
+    * the driver merges the per-partition partials. A projection over the
+    * cache has no exchange, so it is not planned adaptively and runs no
+    * separate cache stage; a global aggregate here ran three jobs (cache,
+    * partial aggregate, final aggregate). Each partial holds two counts,
+    * two bounds and the partition's pending and accepted block sets, so
+    * what reaches the driver is bounded by the blocks in the batch, not by
+    * its rows. */
   private def summarize(input: DataFrame, cutoff: Option[Long]): StreamDriver.BatchSummary = {
     val hasControl = input.columns.contains(ControlCol)
     val control = if (hasControl) col(ControlCol).isNotNull else lit(false)
     val invalidate =
       if (hasControl) when(col(ControlCol) === ControlInvalidate, col(InvalidateFromCol))
-      else lit(null).cast("long")
+      else lit(null)
     val kept = col("block_number").isNotNull && !control &&
       cutoff.map(c => col("block_number") < c).getOrElse(lit(true))
     val pendingFlag = isPending(input)
-    val blocksWhere = (c: Column) => collect_set(when(c, col("block_number")))
-    val r = input
-      .agg(count_if(control).as("control"), count_if(!control).as("data"),
-        min(invalidate).as("invalidate"),
-        max(when(kept && !pendingFlag, col("block_number"))).as("end"),
-        blocksWhere(kept && pendingFlag).as("pending"),
-        blocksWhere(kept && !pendingFlag).as("accepted"))
-      .select(col("control"), col("data"), col("invalidate"), col("end"),
-        array_except(col("pending"), col("accepted")))
-      .head()
-    def long(i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(r.getLong(i))
-    StreamDriver.BatchSummary(r.getLong(0), r.getLong(1), long(2), long(3), r.getSeq[Long](4))
+    val blockWhere = (c: Column) => when(c, col("block_number")).cast("long")
+    input
+      .select(control, invalidate.cast("long"),
+        blockWhere(kept && !pendingFlag), blockWhere(kept && pendingFlag))
+      .queryExecution.toRdd
+      .mapPartitions(rows => Iterator(StreamDriver.BatchSummary.of(rows)))
+      .collect()
+      .foldLeft(StreamDriver.BatchSummary.empty)(_ merge _)
   }
 
   /** Canonical facts plus the pending head (T4): what an operational query
@@ -677,12 +694,58 @@ final class StreamDriver(
 
 object StreamDriver {
 
-  /** What a batch needs to know about itself before it writes anything.
-    * `dataRows` counts every non-control row (the mixed-batch check).
-    * `endBlock` and `pendingBlocks` see only rows that pass the replay
-    * guard; `pendingBlocks` are the blocks the batch carries pending and
-    * does not also accept — the pending store's next content, empty when
-    * the head is fully finalized. */
+  /** Rows per task of a batch's legs and refresh. A batch below it runs
+    * every leg as one task — one parquet file per bucket, one connection
+    * per table — because at a few hundred rows a leg's cost is its tasks,
+    * not its rows: a live batch of ~160 rows in 4 chunks ran each leg as 4
+    * tasks of ~40 rows, 16 tasks competing for 4 cores. A backfill batch
+    * of 10 chunks × 1,000 rows keeps 3 tasks. */
+  private[graft] val RowsPerTask = 4096
+
+  /** Partitions for a batch of `rows` data rows: ⌈rows ÷ RowsPerTask⌉, at
+    * least one. */
+  private[streaming] def tasksFor(rows: Long): Int =
+    math.max(1L, (rows + RowsPerTask - 1) / RowsPerTask).toInt
+
+  /** What a batch needs to know about itself before it writes anything —
+    * one partition's partial, or the merge of all of them.
+    * `dataRows` counts every non-control row (the mixed-batch check and
+    * the legs' size). The block sets see only rows that pass the replay
+    * guard: the cursor's end block is the highest accepted one, and the
+    * pending store's next content is [[pendingBlocks]]. */
   private final case class BatchSummary(controlRows: Long, dataRows: Long,
-      invalidateFrom: Option[Long], endBlock: Option[Long], pendingBlocks: Seq[Long])
+      invalidateFrom: Option[Long], acceptedBlocks: Set[Long], pendingBlocksSeen: Set[Long]) {
+
+    def merge(o: BatchSummary): BatchSummary = BatchSummary(
+      controlRows + o.controlRows, dataRows + o.dataRows,
+      (invalidateFrom ++ o.invalidateFrom).minOption,
+      acceptedBlocks ++ o.acceptedBlocks, pendingBlocksSeen ++ o.pendingBlocksSeen)
+
+    def endBlock: Option[Long] = acceptedBlocks.maxOption
+
+    /** The blocks the batch carries pending and does not also accept —
+      * empty when the head is fully finalized. */
+    lazy val pendingBlocks: Seq[Long] = (pendingBlocksSeen -- acceptedBlocks).toSeq.sorted
+  }
+
+  private object BatchSummary {
+    val empty: BatchSummary = BatchSummary(0L, 0L, None, Set.empty, Set.empty)
+
+    /** Fold one partition of [[StreamDriver.summarize]]'s projection:
+      * (is control, invalidate-from, accepted block, pending block). */
+    def of(rows: Iterator[InternalRow]): BatchSummary = {
+      var control = 0L
+      var data = 0L
+      var invalidate = Option.empty[Long]
+      val accepted = Set.newBuilder[Long]
+      val pending = Set.newBuilder[Long]
+      rows.foreach { r =>
+        if (r.getBoolean(0)) control += 1 else data += 1
+        if (!r.isNullAt(1)) invalidate = Some(invalidate.fold(r.getLong(1))(math.min(_, r.getLong(1))))
+        if (!r.isNullAt(2)) accepted += r.getLong(2)
+        if (!r.isNullAt(3)) pending += r.getLong(3)
+      }
+      BatchSummary(control, data, invalidate, accepted.result(), pending.result())
+    }
+  }
 }

@@ -307,6 +307,72 @@ class StreamingSpec extends SparkSpec {
     assert(driver.operationalEvents.count() == 41L)
   }
 
+  /** Runs one micro-batch of `rows` canonical rows (blocks from 4090, 40
+    * rows a block, so it spans two buckets) from a 4-partition source into
+    * the parquet facts and two Derby sinks; returns the parquet files per
+    * bucket and the task count of every stage the batch ran, in order: the
+    * summary first, then the fact write and the three JDBC appends (the
+    * legs run at the same time, so their order varies). */
+  private def sizedBatch(rows: Int): (Map[String, Int], Seq[Int]) = {
+    import spark.implicits._
+    val root = SparkSpec.tempDir("graft-streaming").toString
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Long, Long)](numPartitions = 4)
+    val source = new graft.sources.BlockSource {
+      override def schema = StreamingSpec.this.schema
+      override def stream(s: org.apache.spark.sql.SparkSession) =
+        mem.toDF().toDF("block_number", "transaction_index", "event_index")
+    }
+    val url = s"jdbc:derby:$root/db;create=true"
+    val tables = Seq("sized_even", "sized_odd")
+    val route = (b: org.apache.spark.sql.DataFrame) => Map(
+      tables(0) -> b.filter($"block_number" % 2 === 0),
+      tables(1) -> b.filter($"block_number" % 2 === 1))
+    val driver = new StreamDriver(spark, s"$root/facts", s"$root/ckpt",
+      jdbcSink = Some(new graft.streaming.JdbcBatchSink(url, "sized_events")),
+      multiTableSink = Some((new graft.streaming.JdbcMultiTableSink(url, tables), route)))
+
+    mem.addData((0 until rows).map(i => (4090L + i / 40, 0L, (i % 40).toLong)))
+    val stages = StreamingSpec.recordStageTasks(spark) {
+      driver.start(source, Trigger.AvailableNow()).awaitTermination()
+    }
+    val batchDir = new java.io.File(s"$root/facts/raw_events/batch_id=0")
+    val files = batchDir.listFiles().filter(_.isDirectory).map(d =>
+      d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    assert(spark.read.parquet(s"$root/facts/raw_events").count() == rows.toLong)
+    (files, stages)
+  }
+
+  test("a batch below the rows-per-task size writes one file per bucket and one task per append") {
+    val (files, stages) = sizedBatch(StreamDriver.RowsPerTask / 8)
+    assert(files == Map("block_bucket=0" -> 1, "block_bucket=1" -> 1))
+    assert(stages.headOption.contains(4), s"the summary reads all 4 source partitions: $stages")
+    assert(stages.tail == Seq(1, 1, 1, 1), s"tasks of the fact write and the JDBC appends: $stages")
+  }
+
+  test("a batch above the rows-per-task size keeps more than one task per leg") {
+    val (files, stages) = sizedBatch(2 * StreamDriver.RowsPerTask + 1)
+    assert(files.values.sum > files.size, s"parquet files per bucket: $files")
+    assert(stages.tail == Seq(3, 3, 3, 3), s"tasks of the fact write and the JDBC appends: $stages")
+  }
+
+  test("a data batch runs one summary job plus one job per parquet leg") {
+    import spark.implicits._
+    val root = SparkSpec.tempDir("graft-streaming").toString
+    val driver = new StreamDriver(spark, s"$root/facts", s"$root/ckpt")
+    def batch(rows: Seq[(Long, Long, Long, Boolean)]) =
+      spark.sparkContext.parallelize(rows, 4).toDF("block_number", "transaction_index", "event_index", "is_pending")
+    def jobs(rows: Seq[(Long, Long, Long, Boolean)], batchId: Long) =
+      StreamingSpec.recordJobs(spark)(driver.processBatch(batch(rows), batchId))
+
+    // fact write + pending write
+    assert(jobs((1L to 40L).map(b => (b, 0L, 0L, false)) :+ ((41L, 0L, 0L, true)), 0L) == 3)
+    // fact write only: a finalized head drops the pending store, no job
+    assert(jobs((41L to 80L).map(b => (b, 0L, 0L, false)), 1L) == 2)
+    assert(driver.operationalEvents.count() == 80L)
+  }
+
   test("a failing relational leg fails the batch, leaks no cache, and its replay converges") {
     import spark.implicits._
     import org.apache.spark.sql.classic.ClassicConversions.castToImpl
@@ -352,6 +418,7 @@ class StreamingSpec extends SparkSpec {
     assert(clean._3.contains((0L, 30L)) && clean._4 == 1L)
 
     spark.catalog.clearCache()
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val root = SparkSpec.tempDir("graft-streaming").toString
     val (q, _, _, _, _) = run(root, fail = true)
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination())
@@ -360,6 +427,10 @@ class StreamingSpec extends SparkSpec {
     assert(!chain.exists(_.isInstanceOf[java.util.concurrent.CompletionException]),
       s"unwrapped: $chain")
     assert(castToImpl(spark).sharedState.cacheManager.isEmpty, "the failed batch left its cache")
+    // below the CacheManager: no RDD the failed batch persisted stays behind
+    // (RDDs other suites persisted on this shared session are not ours)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore,
+      "the failed batch left a persisted RDD")
 
     // the checkpoint replays the uncommitted batch 0 with a healthy sink
     val (rq, rDriver, rSink, rUrl, rTables) = run(root, fail = false)
@@ -420,7 +491,50 @@ class StreamingSpec extends SparkSpec {
 }
 
 object StreamingSpec {
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+  import org.apache.spark.sql.SparkSession
+
   /** Source-side partition opens, counted from executor tasks (the local
     * master shares this JVM). */
   val partitionOpens = new java.util.concurrent.atomic.AtomicInteger
+
+  /** The task count of every stage `body` submits, in submission order. */
+  def recordStageTasks(spark: SparkSession)(body: => Unit): Seq[Int] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    listening(spark, new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        seen.add(e.stageInfo.numTasks)
+    })(body)
+    scala.jdk.CollectionConverters.CollectionHasAsScala(seen).asScala.toSeq
+  }
+
+  /** The number of Spark jobs `body` starts from this thread, the commit
+    * legs' threads included (they carry the caller's job group). */
+  def recordJobs(spark: SparkSession)(body: => Unit): Int = {
+    val group = s"count-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, "counted")
+    try listening(spark, new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    })(body)
+    finally sc.clearJobGroup()
+    jobs.get
+  }
+
+  /** Runs `body` with `l` registered, and waits for the listener bus to
+    * deliver everything `body` posted before removing it (`listenerBus` is
+    * private[spark] in Scala, public in bytecode). */
+  private def listening(spark: SparkSession, l: SparkListener)(body: => Unit): Unit = {
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try body
+    finally {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      sc.removeSparkListener(l)
+    }
+  }
 }
