@@ -31,8 +31,8 @@ import graft.streaming.{JdbcMultiTableSink, StreamDriver}
   *   - `drain`: wire → committed chunks (the bridge leg alone), measured
   *     under ALL THREE framings — JSON lines, gRPC length-prefixed
   *     protobuf ([[graft.sources.net.BlockProtoCodec]]) on the raw socket,
-  *     and the same LPM frames as a gRPC RPC over HTTP/2 cleartext
-  *     ([[graft.sources.net.Http2Wire]]) — so the codec AND the transport
+  *     and the same LPM frames as a gRPC RPC over HTTP/2 cleartext on
+  *     Netty ([[graft.sources.net.GrpcH2]]) — so the codec AND the transport
   *     each have a price;
   *   - `backfill`: chunks → canonical parquet via bounded AvailableNow
   *     micro-batches (the "weeks to sync" anchor; no relational leg);

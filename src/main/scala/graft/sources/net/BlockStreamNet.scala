@@ -22,15 +22,19 @@ import graft.sources.v2.{BlockFeedProvider, JsonBlockFeed}
   * discriminated arms, the same nesting (`invalidate.cursor.orderKey`,
   * `data.{production,finality,endCursor,data[].header/events[]}`), the
   * same subscribe shape (`{filter, finality, startingCursor}`) — under
-  * either of two framings selected per connection mode: one JSON object
-  * per line (Jackson is Spark's own JSON library), or protobuf messages
-  * in gRPC length-prefixed envelopes via the hand-rolled [[ProtoWire]] /
-  * [[BlockProtoCodec]] (the sandbox ships no protobuf jar, so the wire
-  * format is implemented from its published spec) — optionally carried as
-  * a real gRPC server-streaming RPC over HTTP/2 cleartext via
-  * [[Http2Wire]], the reference's production transport shape
-  * (`@apibara/protocol` over gRPC) at every layer. The
-  * JSON rendering of the grammar:
+  * one of three framings selected per connection mode:
+  *  - one JSON object per line on a raw socket (Jackson is Spark's own
+  *    JSON library);
+  *  - protobuf messages in gRPC length-prefixed envelopes on a raw socket
+  *    ([[ProtoWire]] / [[BlockProtoCodec]]; no protobuf jar is on the
+  *    classpath, so the wire format is implemented from its published
+  *    spec);
+  *  - those envelopes as a gRPC server-streaming RPC over HTTP/2 on Netty
+  *    ([[GrpcH2]]), cleartext (h2c) or over TLS with ALPN h2 — the
+  *    reference's production transport shape (`@apibara/protocol` over
+  *    gRPC) at every layer.
+  *
+  * The JSON rendering of the grammar:
   *
   *   client → server  {"filter":[{"events":[...]}],"finality":"pending",
   *                     "startingCursor":{"orderKey":N}}
@@ -142,10 +146,12 @@ object BlockStreamWire {
 }
 
 /** A finite replay server: serves the scripted message sequence to every
-  * connection, starting at the `startingCursor.orderKey` the client
+  * subscription, starting at the `startingCursor.orderKey` the client
   * subscribes with — the deterministic-replay behavior a chain node's
-  * cursor subscription gives the reference (`index.ts:16-24`). Connections
-  * are accepted sequentially (the drainer is a single bridge process); the
+  * cursor subscription gives the reference (`index.ts:16-24`). Over gRPC
+  * (`h2c`, or `tls`) every subscription runs at once on its own thread,
+  * whether it arrives on a new connection or as one more stream on an open
+  * one. The raw-socket framings serve one connection at a time. The
   * server lives until [[close]] or process exit.
   *
   * `paceMs` > 0 sleeps between messages — the cadence knob the ingest
@@ -160,33 +166,26 @@ object BlockStreamWire {
   */
 final class BlockStreamServer(script: Seq[String], port: Int = 0,
     paceMs: Long = 0L, binary: Boolean = false, h2c: Boolean = false,
-    h2cWindow: Int = Http2Wire.TunedWindow,
-    tls: Option[javax.net.ssl.SSLContext] = None,
-    mux: Boolean = false) {
-  private val server = tls match {
-    case Some(ctx) => TlsWire.serverSocket(ctx, port) // h2 over TLS + ALPN
-    case None => new ServerSocket(port)
+    tls: Option[javax.net.ssl.SSLContext] = None) {
+  private val grpc: Option[GrpcH2.Server] =
+    Option.when(h2c || tls.isDefined)(GrpcH2.serve(port, tls)(serveScript))
+  private val raw: Option[ServerSocket] =
+    Option.when(grpc.isEmpty)(new ServerSocket(port))
+  def boundPort: Int = grpc.map(_.port).getOrElse(raw.get.getLocalPort)
+
+  raw.foreach { server =>
+    val acceptor = new Thread(() => serveLoop(server), "block-stream-server")
+    acceptor.setDaemon(true)
+    acceptor.start()
   }
-  def boundPort: Int = server.getLocalPort
 
-  private val acceptor = new Thread(() => serveLoop(), "block-stream-server")
-  acceptor.setDaemon(true)
-  acceptor.start()
-
-  private def serveLoop(): Unit =
+  private def serveLoop(server: ServerSocket): Unit =
     try while (!server.isClosed) {
       val sock = server.accept()
-      try serveOne(sock)
+      try { if (binary) serveBinary(sock) else serveJson(sock) }
       catch { case NonFatal(_) => () } // client vanished: await the next
       finally sock.close()
     } catch { case NonFatal(_) => () } // server closed
-
-  private def serveOne(sock: Socket): Unit =
-    if (tls.isDefined) // h2: reject non-ALPN clients before any h2 byte
-      serveH2(TlsWire.requireH2(sock.asInstanceOf[javax.net.ssl.SSLSocket]))
-    else if (h2c) serveH2(sock)
-    else if (binary) serveBinary(sock)
-    else serveJson(sock)
 
   private def serveJson(sock: Socket): Unit = {
     val in = new BufferedReader(
@@ -205,52 +204,19 @@ final class BlockStreamServer(script: Seq[String], port: Int = 0,
 
   /** The same subscription contract under protobuf framing: one
     * length-prefixed StreamDataRequest in, length-prefixed
-    * StreamDataResponse frames out ([[BlockProtoCodec]]). The script stays
-    * authored as JSON grammar lines — each is encoded on the way out, so
-    * both framings serve ONE scenario definition. */
+    * StreamDataResponse frames out ([[BlockProtoCodec]]). */
   private def serveBinary(sock: Socket): Unit = {
-    val in = sock.getInputStream
     val out = sock.getOutputStream
-    val sub = BlockProtoCodec.decodeRequest(ProtoWire.readFrame(in).getOrElse(
-      throw new IllegalStateException("client closed before subscribing")))
-    val cursor = sub.path("startingCursor").path("orderKey").asInt(0)
-    script.drop(cursor).foreach { msg =>
-      if (paceMs > 0) Thread.sleep(paceMs)
-      ProtoWire.writeFrame(out,
-        BlockProtoCodec.encodeResponse(BlockStreamWire.mapper.readTree(msg)))
-      out.flush()
-    }
-    ProtoWire.writeFrame(out, BlockProtoCodec.encodeResponse(
-      BlockStreamWire.mapper.readTree(BlockStreamWire.endOfScript)))
-    out.flush()
+    serveScript(ProtoWire.readFrame(sock.getInputStream).getOrElse(
+      throw new IllegalStateException("client closed before subscribing")),
+      msg => { ProtoWire.writeFrame(out, msg); out.flush() })
   }
 
-  /** The reference's actual transport shape: the same protobuf messages
-    * carried as a gRPC server-streaming RPC over HTTP/2 (cleartext h2c,
-    * or h2 when the accept socket is TLS — the framing layer cannot tell)
-    * — request headers + LPM subscribe in, response DATA frames out,
-    * `grpc-status: 0` trailers on completion ([[Http2Wire]]). The loop
-    * form serves EVERY subscription the client opens on the connection
-    * (stream ids 1, 3, 5…), so a resubscribing drainer may reuse its
-    * connection instead of redialing. */
-  private def serveH2(sock: Socket): Unit =
-    if (mux)
-      // concurrent form ([[Http2Mux]]): every subscription the client holds
-      // open on this connection streams SIMULTANEOUSLY — the multi-tenant
-      // shape, one handler thread per stream, shared flow-control windows
-      Http2Mux.serverLoop(
-        sock.getInputStream, sock.getOutputStream, h2cWindow) { (reqBytes, call) =>
-        serveScript(reqBytes, call.send, () => call.finish())
-      }
-    else
-      Http2Wire.serverAcceptLoop(
-        sock.getInputStream, sock.getOutputStream, h2cWindow) { (reqBytes, call) =>
-        serveScript(reqBytes, call.send, () => call.finish())
-      }
-
-  /** One subscription against the script, transport-call agnostic. */
-  private def serveScript(reqBytes: Array[Byte],
-      send: Array[Byte] => Unit, finish: () => Unit): Unit = {
+  /** One protobuf subscription against the script, whichever transport
+    * carries it. The script stays authored as JSON grammar lines — each is
+    * encoded on the way out, so every framing serves ONE scenario
+    * definition. */
+  private def serveScript(reqBytes: Array[Byte], send: Array[Byte] => Unit): Unit = {
     val sub = BlockProtoCodec.decodeRequest(reqBytes)
     val cursor = sub.path("startingCursor").path("orderKey").asInt(0)
     script.drop(cursor).foreach { msg =>
@@ -259,10 +225,9 @@ final class BlockStreamServer(script: Seq[String], port: Int = 0,
     }
     send(BlockProtoCodec.encodeResponse(
       BlockStreamWire.mapper.readTree(BlockStreamWire.endOfScript)))
-    finish()
   }
 
-  def close(): Unit = server.close()
+  def close(): Unit = { grpc.foreach(_.close()); raw.foreach(_.close()) }
 }
 
 object BlockStreamServer {
@@ -316,48 +281,41 @@ object BlockStreamDrainer {
   /** One connection: subscribe at the current chunk count, drain until the
     * terminal system message, EOF, or `maxMessages` chunks this call.
     * Returns the number of chunks committed; `completed` is true iff the
-    * end-of-script message was seen. */
+    * end-of-script message was seen. `h2c` or `tls` selects gRPC over
+    * HTTP/2 ([[GrpcH2]]); TLS verifies the server certificate against
+    * `host`. */
   def drainOnce(host: String, port: Int, dir: String,
       maxMessages: Long = Long.MaxValue, binary: Boolean = false,
       h2c: Boolean = false,
-      h2cWindow: Int = Http2Wire.TunedWindow,
       tls: Option[javax.net.ssl.SSLContext] = None): (Long, Boolean) = {
     val feed = new JsonBlockFeed(dir)
     val cursor = BlockFeedProvider.listChunks(dir).length
-    // TLS implies the h2 transport: ALPN negotiates "h2", the hostname is
-    // verified against the server certificate, and :scheme flips to https
-    val sock = tls match {
-      case Some(ctx) => TlsWire.connect(ctx, host, port)
-      case None => new Socket(host, port)
-    }
+    def request = BlockProtoCodec.encodeRequest(
+      BlockStreamWire.mapper.readTree(BlockStreamWire.subscribe(cursor)))
+    val conn: java.io.Closeable =
+      if (h2c || tls.isDefined) GrpcH2.connect(host, port, tls)
+      else new Socket(host, port)
     try {
       // subscribe + message pull under the chosen framing; the dispatch
       // below sees only the grammar tree and cannot tell the framings apart
-      val nextMessage: () => JsonNode =
-        if (h2c || tls.isDefined) {
-          // the reference's production shape: gRPC server-streaming over
-          // HTTP/2 — LPM frames ride DATA frames instead of the raw socket
-          val body = Http2Wire.clientCall(sock.getInputStream, sock.getOutputStream,
-            s"$host:$port", BlockProtoCodec.encodeRequest(
-              BlockStreamWire.mapper.readTree(BlockStreamWire.subscribe(cursor))),
-            recvWindow = h2cWindow,
-            scheme = if (tls.isDefined) "https" else "http")
+      val nextMessage: () => JsonNode = conn match {
+        case grpc: GrpcH2.Connection =>
+          val body = grpc.call(request)
           () => ProtoWire.readFrame(body).map(BlockProtoCodec.decodeResponse).orNull
-        } else if (binary) {
+        case sock: Socket if binary =>
           val out = sock.getOutputStream
-          ProtoWire.writeFrame(out, BlockProtoCodec.encodeRequest(
-            BlockStreamWire.mapper.readTree(BlockStreamWire.subscribe(cursor))))
+          ProtoWire.writeFrame(out, request)
           out.flush()
           val in = sock.getInputStream
           () => ProtoWire.readFrame(in).map(BlockProtoCodec.decodeResponse).orNull
-        } else {
+        case sock: Socket =>
           val out = new PrintWriter(
             new OutputStreamWriter(sock.getOutputStream, StandardCharsets.UTF_8))
           out.println(BlockStreamWire.subscribe(cursor)); out.flush()
           val in = new BufferedReader(
             new InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
           () => Option(in.readLine()).map(BlockStreamWire.mapper.readTree).orNull
-        }
+      }
       var n = 0L
       var completed = false
       var msg = if (n < maxMessages) nextMessage() else null
@@ -387,36 +345,36 @@ object BlockStreamDrainer {
         msg = if (!completed && n < maxMessages) nextMessage() else null
       }
       (n, completed)
-    } finally sock.close()
+    } finally conn.close()
   }
 
   /** Reconnecting drain: the long-lived bridge loop. Resumes from the
     * chunk count after every disconnect (the reference bridge's retry,
     * `index.ts:127-141`); `maxRetries` bounds consecutive FAILED attempts
-    * (any progress resets the counter). Returns total chunks committed. */
+    * (any progress resets the counter). Returns total chunks committed;
+    * giving up throws with the last attempt's error as the cause. */
   def drain(host: String, port: Int, dir: String,
       maxRetries: Int = 5, backoffMs: Long = 200L,
       binary: Boolean = false, h2c: Boolean = false,
-      h2cWindow: Int = Http2Wire.TunedWindow,
       tls: Option[javax.net.ssl.SSLContext] = None): Long = {
     var total = 0L
     var failures = 0
     var completed = false
+    var lastError: Throwable = null
     while (!completed && failures <= maxRetries) {
       try {
-        val (n, done) = drainOnce(host, port, dir, binary = binary, h2c = h2c,
-          h2cWindow = h2cWindow, tls = tls)
+        val (n, done) = drainOnce(host, port, dir, binary = binary, h2c = h2c, tls = tls)
         total += n
         completed = done
         if (n > 0) failures = 0
         if (!done) { failures += 1; Thread.sleep(backoffMs) }
       } catch {
-        case NonFatal(_) => failures += 1; Thread.sleep(backoffMs)
+        case NonFatal(e) => lastError = e; failures += 1; Thread.sleep(backoffMs)
       }
     }
     if (!completed)
       throw new IllegalStateException(
-        s"drain gave up after $maxRetries consecutive failed attempts")
+        s"drain gave up after $maxRetries consecutive failed attempts", lastError)
     total
   }
 

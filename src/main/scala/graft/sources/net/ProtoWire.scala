@@ -17,8 +17,8 @@ import com.fasterxml.jackson.databind.node.ObjectNode
   * carries the reference's message GRAMMAR, and until round 12 it was
   * framed as JSON lines only. [[BlockProtoCodec]] frames the same grammar
   * as protobuf messages inside gRPC's Length-Prefixed-Message envelope,
-  * and since round 14 [[Http2Wire]] carries those envelopes as a real
-  * gRPC server-streaming RPC over HTTP/2 cleartext (h2c) — the reference's
+  * and [[GrpcH2]] carries those envelopes as a real gRPC server-streaming
+  * RPC over HTTP/2 on Netty (h2c, or h2 over TLS) — the reference's
   * production transport shape (`@apibara/protocol`, a gRPC stream) at
   * every layer: grammar, schema, framing, and transport.
   *

@@ -1,22 +1,20 @@
 package graft.sources.net
 
 import java.io.FileInputStream
-import java.net.ServerSocket
 import java.security.{KeyStore, SecureRandom}
 
-import javax.net.ssl.{KeyManagerFactory, SSLContext, SSLServerSocket,
-  SSLSocket, TrustManagerFactory}
+import javax.net.ssl.{KeyManagerFactory, SSLContext, SSLEngine, TrustManagerFactory}
 
 /** TLS for the h2 transport — the deployment face the reference's
   * production feed actually wears (its Apibara gRPC subscription rides
-  * TLS; reference `src/index.ts:16-24`), layered UNDER [[Http2Wire]],
-  * which is transport-agnostic and cannot tell h2 from h2c.
+  * TLS; reference `src/index.ts:16-24`). [[GrpcH2]] runs each engine
+  * under Netty's `SslHandler`, below the HTTP/2 codec.
   *
   * All of it is the JDK's own public TLS stack:
   *  - ALPN (RFC 7301) negotiates the literal token "h2" — RFC 7540 §3.3's
   *    requirement for HTTP/2 over TLS. Servers OFFER h2 and reject a
   *    connection that negotiated anything else; clients REQUIRE it.
-  *  - RFC 7540 §9.2 demands TLS 1.2+; both factories pin the enabled
+  *  - RFC 7540 §9.2 demands TLS 1.2+; both sides pin the enabled
   *    protocol versions to TLSv1.3/TLSv1.2 explicitly rather than trust
   *    JDK defaults.
   *  - Clients verify the server hostname against the certificate
@@ -60,43 +58,20 @@ object TlsWire {
     ctx
   }
 
-  private val H2 = "h2"
   private val Protocols = Array("TLSv1.3", "TLSv1.2")
 
-  /** Listening socket that offers ALPN "h2" (and TLS 1.2+ only) to every
-    * accepted connection. */
-  def serverSocket(ctx: SSLContext, port: Int): ServerSocket = {
-    val s = ctx.getServerSocketFactory.createServerSocket(port)
-      .asInstanceOf[SSLServerSocket]
-    val p = s.getSSLParameters
-    p.setApplicationProtocols(Array(H2))
+  /** An engine for one connection: TLS 1.2+ and ALPN "h2" only. `peer`
+    * (host, port) makes it a client that verifies the server certificate
+    * against `host` (SAN/CN); None makes it a server. Whether ALPN agreed
+    * on h2 is checked once the handshake completes ([[GrpcH2]]). */
+  def engine(ctx: SSLContext, peer: Option[(String, Int)]): SSLEngine = {
+    val e = peer.fold(ctx.createSSLEngine()) { case (h, p) => ctx.createSSLEngine(h, p) }
+    e.setUseClientMode(peer.isDefined)
+    val p = e.getSSLParameters
+    p.setApplicationProtocols(Array("h2"))
     p.setProtocols(Protocols)
-    s.setSSLParameters(p)
-    s
-  }
-
-  /** Force the handshake on an accepted socket and require that ALPN
-    * agreed on "h2" — a client that offered no ALPN (or another protocol)
-    * is rejected here, before any HTTP/2 byte is read (RFC 7540 §3.3). */
-  def requireH2(sock: SSLSocket): SSLSocket = {
-    sock.startHandshake()
-    val alpn = sock.getApplicationProtocol
-    require(alpn == H2, s"ALPN did not negotiate h2 (got '$alpn')")
-    sock
-  }
-
-  /** Client connect: TLS 1.2+, ALPN "h2", hostname verified against the
-    * server certificate's SAN/CN. Fails the handshake on an untrusted or
-    * wrong-host certificate, and fails fast if ALPN landed anywhere but
-    * h2. */
-  def connect(ctx: SSLContext, host: String, port: Int): SSLSocket = {
-    val sock = ctx.getSocketFactory.createSocket(host, port)
-      .asInstanceOf[SSLSocket]
-    val p = sock.getSSLParameters
-    p.setApplicationProtocols(Array(H2))
-    p.setProtocols(Protocols)
-    p.setEndpointIdentificationAlgorithm("HTTPS")
-    sock.setSSLParameters(p)
-    requireH2(sock)
+    if (peer.isDefined) p.setEndpointIdentificationAlgorithm("HTTPS")
+    e.setSSLParameters(p)
+    e
   }
 }

@@ -41,9 +41,9 @@ import scala.collection.mutable
   * Honest boundaries: text result/parameter format only (binary format
   * buys nothing at these row sizes and doubles the codec surface), no
   * COPY sub-protocol, no NotificationResponse listeners, and no TLS on
-  * this socket (the sandbox target is loopback; the TLS handshake layer
-  * exists separately in [[graft.sources.net.TlsWire]] and would slot in
-  * front of the same streams).
+  * this socket (the target is loopback; the block feed's TLS contexts,
+  * [[graft.sources.net.TlsWire]], are deployment inputs that would serve
+  * here too, but this client speaks plain socket streams).
   */
 object PgWire {
 

@@ -119,6 +119,21 @@ class NetFeedSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  test("a drain that gives up carries the last failure as its cause") {
+    val root = SparkSpec.tempDir("graft-net-giveup").toString
+    val srv = new BlockStreamServer(Seq("""{"_tag":"bogus"}"""))
+    try {
+      val e = intercept[IllegalStateException] {
+        BlockStreamDrainer.drain("127.0.0.1", srv.boundPort, s"$root/feed",
+          maxRetries = 1, backoffMs = 10L)
+      }
+      assert(e.getMessage.contains("drain gave up"))
+      val chain = Iterator.iterate[Throwable](e.getCause)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(c => String.valueOf(c.getMessage).contains("unknown message arm: bogus")),
+        s"the arm error must survive as the cause of: $e")
+    } finally srv.close()
+  }
+
   test("a separate server process serves the stream over a real socket") {
     val root = SparkSpec.tempDir("graft-net-proc").toString
     val dir = s"$root/feed"

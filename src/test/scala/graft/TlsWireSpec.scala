@@ -1,7 +1,5 @@
 package graft
 
-import java.net.Socket
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.net._
@@ -13,6 +11,20 @@ import graft.sources.v2.BlockFeedProvider
   * end-to-end over TLS, plus every rejection path: no ALPN, wrong host,
   * untrusted certificate, cleartext client. */
 class TlsWireSpec extends AnyFunSuite {
+
+  private val preface = "PRI * HTTP/2.0\r\n\r\nSM\r\n\r\n".getBytes("ISO-8859-1")
+
+  /** drainOnce against `port` must fail with a handshake refusal. */
+  private def refusedHandshake(host: String, port: Int,
+      ctx: javax.net.ssl.SSLContext): Unit = {
+    val root = SparkSpec.tempDir("graft-tls-refused").toString
+    val e = intercept[Exception] {
+      BlockStreamDrainer.drainOnce(host, port, s"$root/feed", tls = Some(ctx))
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(_.isInstanceOf[javax.net.ssl.SSLHandshakeException]),
+      s"expected an SSLHandshakeException in the cause chain of $e")
+  }
 
   private val storePass = "changeit"
   private def pw = storePass.toCharArray
@@ -82,15 +94,16 @@ class TlsWireSpec extends AnyFunSuite {
     val srv = new BlockStreamServer(Seq(BlockStreamWire.heartbeat),
       tls = Some(TlsWire.serverContext(ksPath, pw)))
     try {
-      // a trusting client that never OFFERS h2: the handshake itself may
-      // complete (ALPN is optional at the TLS layer), but the server's
-      // requireH2 closes the connection before serving a single h2 byte
+      // a trusting client that never OFFERS h2 (the drainer always does,
+      // so this one is a plain JDK socket): the handshake itself may
+      // complete (ALPN is optional at the TLS layer), but the server
+      // closes the connection before serving a single h2 byte
       val ctx = TlsWire.clientContext(tsPath, pw)
       val sock = ctx.getSocketFactory.createSocket("localhost", srv.boundPort)
         .asInstanceOf[javax.net.ssl.SSLSocket]
       try intercept[Exception] {
         sock.startHandshake()
-        sock.getOutputStream.write(Http2Wire.ClientPreface)
+        sock.getOutputStream.write(preface)
         sock.getOutputStream.flush()
         assert(sock.getInputStream.read() != -1, "server must hang up")
       } finally sock.close()
@@ -105,11 +118,11 @@ class TlsWireSpec extends AnyFunSuite {
       tls = Some(TlsWire.serverContext(ks2, pw)))
     val ctx = TlsWire.clientContext(ts2, pw)
     try {
-      intercept[javax.net.ssl.SSLHandshakeException] {
-        TlsWire.connect(ctx, "127.0.0.1", srv.boundPort)
-      }
+      refusedHandshake("127.0.0.1", srv.boundPort, ctx)
       // and the positive control: the SAME identity accepted via its name
-      TlsWire.connect(ctx, "localhost", srv.boundPort).close()
+      val root = SparkSpec.tempDir("graft-tls-hostonly").toString
+      assert(BlockStreamDrainer.drainOnce("localhost", srv.boundPort,
+        s"$root/feed", tls = Some(ctx)) == ((1L, true)))
     } finally srv.close()
   }
 
@@ -119,25 +132,19 @@ class TlsWireSpec extends AnyFunSuite {
       tls = Some(TlsWire.serverContext(otherKs, pw)))
     // trusts only the SUITE identity, not the stranger's
     val ctx = TlsWire.clientContext(tsPath, pw)
-    try intercept[javax.net.ssl.SSLHandshakeException] {
-      TlsWire.connect(ctx, "localhost", srv.boundPort)
-    } finally srv.close()
+    try refusedHandshake("localhost", srv.boundPort, ctx)
+    finally srv.close()
   }
 
   test("a cleartext h2c client cannot reach a TLS port") {
     val srv = new BlockStreamServer(Seq(BlockStreamWire.heartbeat),
       tls = Some(TlsWire.serverContext(ksPath, pw)))
+    // the TLS server cannot parse the h2c preface as a ClientHello: it
+    // hangs up, and the drainer's read fails
+    val root = SparkSpec.tempDir("graft-tls-cleartext").toString
     try intercept[Exception] {
-      val sock = new Socket("localhost", srv.boundPort)
-      try {
-        sock.getOutputStream.write(Http2Wire.ClientPreface)
-        sock.getOutputStream.flush()
-        // the TLS server cannot parse the preface as a ClientHello: it
-        // hangs up (possibly after an alert); any read path must fail
-        val in = sock.getInputStream
-        while (in.read() != -1) ()
-        throw new java.io.EOFException("server hung up on cleartext client")
-      } finally sock.close()
+      BlockStreamDrainer.drainOnce("localhost", srv.boundPort, s"$root/feed",
+        binary = true, h2c = true)
     } finally srv.close()
   }
 }
