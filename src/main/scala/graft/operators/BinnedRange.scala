@@ -21,9 +21,7 @@ import org.apache.spark.sql.functions._
   *
   * The same trick with `on` keys prepended handles the per-entity variant
   * ("events near each other for the same user"), and composing two binned
-  * joins on (start, end) handles interval overlap — see the Twamm segment
-  * join (queries/Twamm.scala) for the interval flavor specialized to the
-  * reference's schema.
+  * joins on (start, end) handles interval overlap.
   */
 object BinnedRange {
 

@@ -1,93 +1,247 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.fixtures.Fixtures
+import graft.ingest.Ingest
 
-/** Operational "current state" views of the reference, §2.11 of SURVEY.md.
+/** Operational "current state" views of the reference, §2.11 of SURVEY.md,
+  * as one per-pool plan.
   *
-  * Spark-first rewrites: the reference's `LEFT JOIN LATERAL ... ORDER BY
-  * event_id DESC LIMIT 1` (dao.ts:392-405) and correlated scalar subqueries
-  * (dao.ts:407-417) are decorrelated into `max_by` grouped aggregates +
-  * broadcast joins — per-pool aggregates are tiny (one row per pool), so every
-  * post-aggregation join is a broadcast, and the only shuffles are the
-  * map-side-combined groupBys over the fact tables.
+  * The reference refreshes its seven operational views together on every
+  * head block (dao.ts:1798-1807). Here all seven are projections of one
+  * memoized frame, [[tier]], built with a single shuffle. Every fact row the
+  * views read is tagged with its source and hashed by pool; then, within
+  * each pool:
+  *   1. a window over the whole pool finds the values the "since the last
+  *      event" sums compare against: the last swap-or-initialization event
+  *      and its tick, and the last virtual execution and its block time.
+  *      The reference's correlated subqueries (dao.ts:407-417, 786-794)
+  *      thereby become conditional sums, with no join back to the pool row;
+  *   2. one grouping by (pool, kind, position) yields, at kind 0, one row
+  *      per pool holding every "last event" column — a conditional `max_by`
+  *      per source, the decorrelated `LATERAL ... ORDER BY event_id DESC
+  *      LIMIT 1` of dao.ts:392-405 — together with those sums; at kind 1,
+  *      the net and total liquidity per (pool, tick bound) (dao.ts:475-499);
+  *      at kind 2, the net sale-rate change per (pool, time) after the last
+  *      execution (dao.ts:817-851).
+  * Block times reach the executions through a broadcast join to `blocks`
+  * ahead of the shuffle. A refresh therefore runs three jobs for the memo
+  * (that broadcast, the shuffle's map stage, the checkpoint) and only
+  * narrow filters and projections per view: at this size the tier costs
+  * per job and per generated class, not per row.
+  *
+  * The reference's trigger-maintained per-tick table (dao.ts:501-647) is
+  * replaced by this recompute.
   */
 object CoreViews {
 
   private val dec38 = DecimalType(38, 0)
   private val dec30 = DecimalType(30, 0)
 
-  /** pool_states_view (dao.ts:384-433): latest swap ∨ initialization per pool
-    * plus liquidity deltas applied since the last swap, counted only when the
-    * position straddles the current tick.
-    */
-  def poolStates(spark: SparkSession, sfDir: String): DataFrame =
-    graft.util.Memo.checkpointed(spark, sfDir, "pool_states") {
-      Fixtures.register(spark, sfDir)
-      poolStatesFrom(spark, spark.table("pool_keys"), spark.table("swaps"),
-        spark.table("pool_initializations"), spark.table("position_updates"))
+  /** The tables the tier reads: the fact tables and the two dimensions. */
+  final case class Facts(pools: DataFrame, swaps: DataFrame, inits: DataFrame,
+      updates: DataFrame, executions: DataFrame, orders: DataFrame, placed: DataFrame,
+      closed: DataFrame, snapshots: DataFrame, splines: DataFrame, blocks: DataFrame)
+
+  object Facts {
+    /** The tables `Fixtures.register` declares. */
+    def registered(spark: SparkSession): Facts = {
+      def t(name: String) = spark.table(name)
+      Facts(t("pool_keys"), t("swaps"), t("pool_initializations"), t("position_updates"),
+        t("twamm_virtual_order_executions"), t("twamm_order_updates"), t("limit_order_placed"),
+        t("limit_order_closed"), t("oracle_snapshots"), t("liquidity_updated"), t("blocks"))
     }
 
-  /** Pipeline over explicit inputs (unit-testable with hand-built frames). */
-  def poolStatesFrom(spark: SparkSession, pools: DataFrame, swaps: DataFrame,
-      inits: DataFrame, updates: DataFrame): DataFrame = {
+    /** Empty tables with just the columns the tier reads: the base for
+      * hand-built inputs. */
+    def empty(spark: SparkSession): Facts = {
+      def e(ddl: String) = spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(ddl))
+      val ev = "event_id BIGINT, key_hash STRING"
+      Facts(
+        pools = e("key_hash STRING"),
+        swaps = e("event_id BIGINT, pool_key_hash STRING, sqrt_ratio_after DOUBLE, " +
+          "tick_after BIGINT, liquidity_after DECIMAL(18,0)"),
+        inits = e("event_id BIGINT, pool_key_hash STRING, tick BIGINT, sqrt_ratio DOUBLE"),
+        updates = e("event_id BIGINT, pool_key_hash STRING, lower_bound BIGINT, " +
+          "upper_bound BIGINT, liquidity_delta DECIMAL(18,0)"),
+        executions = e(s"$ev, token0_sale_rate DECIMAL(18,0), token1_sale_rate DECIMAL(18,0)"),
+        orders = e(s"$ev, sale_rate_delta0 DECIMAL(18,0), sale_rate_delta1 DECIMAL(18,0), " +
+          "start_time BIGINT, end_time BIGINT"),
+        placed = e(ev),
+        closed = e(ev),
+        snapshots = e("key_hash STRING, snapshot_block_timestamp BIGINT"),
+        splines = e("pool_key_hash STRING"),
+        blocks = e("number BIGINT, time BIGINT"))
+    }
+  }
+
+  // source tags of the tier's tagged union
+  private val Pool = 0
+  private val Swap = 1
+  private val Init = 2
+  private val Update = 3
+  private val Execution = 4
+  private val Order = 5
+  private val Placed = 6
+  private val Closed = 7
+  private val Snapshot = 8
+  private val Spline = 9
+
+  /** The memoized tier over the registered fixtures: a localCheckpoint, so
+    * every view reads a leaf RDD rather than re-planning the shuffle. */
+  def tier(spark: SparkSession, sfDir: String): DataFrame =
+    graft.util.Memo.checkpointed(spark, sfDir, "op_tier") {
+      Fixtures.register(spark, sfDir)
+      tierFrom(spark, Facts.registered(spark))
+    }
+
+  /** The tier over explicit inputs (unit-testable with hand-built frames).
+    * Columns: `pool_key_hash`, `kind`, `pos`, `pool`, `s0`, `s1`. At kind 0
+    * (`pos` NULL) `pool` is the pool's state: `in_pools`, the pool_states
+    * columns, the TWAMM ones (NULL when the last execution's block is not in
+    * `blocks`; `twamm_last_event_id` is its last_event_id), `placed_id`,
+    * `closed_id`, `has_snapshot`, `last_snapshot`, `has_spline`. At kind 1
+    * (`pos` a tick bound) `s0`, `s1` are its net and total liquidity; at
+    * kind 2 (`pos` a time after the last execution) the net sale-rate
+    * changes of token 0 and 1. Keyed rows whose sums cancel out are dropped.
+    * The struct keeps the keyed rows narrow in the checkpointed memo. */
+  def tierFrom(spark: SparkSession, f: Facts): DataFrame = {
     import spark.implicits._
 
-    // top-1-per-key via max_by (decorrelated lateral, dao.ts:392-405)
-    val lastSwap = swaps
-      .groupBy($"pool_key_hash".as("key_hash"))
-      .agg(max_by(
-        struct($"event_id", $"sqrt_ratio_after", $"tick_after", $"liquidity_after"),
-        $"event_id").as("s"))
-      .select($"key_hash", $"s.event_id".as("swap_event_id"),
-        $"s.sqrt_ratio_after", $"s.tick_after", $"s.liquidity_after")
+    // one layout for every source: pool, tag, event id, one DOUBLE, two
+    // BIGINTs and two DECIMALs; a source's unused slots are NULL
+    val slots = Seq("eid" -> LongType, "a" -> DoubleType, "t" -> LongType, "u" -> LongType,
+      "x" -> dec38, "y" -> dec38)
+    def tagged(df: DataFrame, key: String, src: Int, cols: (String, Column)*): DataFrame = {
+      val named = cols.toMap
+      df.select(col(key).cast(StringType).as("pool_key_hash") +: lit(src).as("src") +:
+        slots.map { case (n, t) => named.getOrElse(n, lit(null)).cast(t).as(n) }: _*)
+    }
+    val blocks = f.blocks.select($"number", $"time")
+    val rows = Seq(
+      tagged(f.pools, "key_hash", Pool),
+      tagged(f.swaps, "pool_key_hash", Swap, "eid" -> $"event_id", "a" -> $"sqrt_ratio_after",
+        "t" -> $"tick_after", "x" -> $"liquidity_after"),
+      tagged(f.inits, "pool_key_hash", Init, "eid" -> $"event_id", "a" -> $"sqrt_ratio",
+        "t" -> $"tick"),
+      tagged(f.updates, "pool_key_hash", Update, "eid" -> $"event_id", "t" -> $"lower_bound",
+        "u" -> $"upper_bound", "x" -> $"liquidity_delta"),
+      // the block's number marks a found block, also one with a NULL time
+      tagged(f.executions.join(broadcast(blocks), Ingest.blockOf($"event_id") === $"number", "left"),
+        "key_hash", Execution, "eid" -> $"event_id", "t" -> $"time", "u" -> $"number",
+        "x" -> $"token0_sale_rate", "y" -> $"token1_sale_rate"),
+      tagged(f.orders, "key_hash", Order, "eid" -> $"event_id", "t" -> $"start_time",
+        "u" -> $"end_time", "x" -> $"sale_rate_delta0", "y" -> $"sale_rate_delta1"),
+      tagged(f.placed, "key_hash", Placed, "eid" -> $"event_id"),
+      tagged(f.closed, "key_hash", Closed, "eid" -> $"event_id"),
+      tagged(f.snapshots, "key_hash", Snapshot, "t" -> $"snapshot_block_timestamp"),
+      tagged(f.splines, "pool_key_hash", Spline)).reduce(_ union _)
+      // one map task per core reads every source's partitions, instead of
+      // one task per partition of each of the ten sources
+      .coalesce(spark.sparkContext.defaultParallelism)
 
-    val lastInit = inits
-      .groupBy($"pool_key_hash".as("key_hash"))
-      .agg(max_by(struct($"event_id", $"sqrt_ratio", $"tick"), $"event_id").as("i"))
-      .select($"key_hash", $"i.event_id".as("init_event_id"),
-        $"i.sqrt_ratio".as("init_sqrt_ratio"), $"i.tick".as("init_tick"))
+    // 1. per pool, what the sums compare against
+    val pool = Window.partitionBy($"pool_key_hash")
+    def at(src: Int, c: Column): Column = when($"src" === src, c)
+    def latest(src: Int, c: Column): Column = max_by(c, at(src, $"eid")).over(pool)
+    val compared = rows.select($"*",
+      coalesce(max(at(Swap, $"eid")).over(pool), max(at(Init, $"eid")).over(pool)).as("w_swap_eid"),
+      coalesce(latest(Swap, $"t"), latest(Init, $"t")).as("w_tick"),
+      max(at(Execution, $"eid")).over(pool).as("w_exec_eid"),
+      latest(Execution, $"t").as("w_exec_time"),
+      max(at(Pool, lit(true))).over(pool).as("w_in_pools"))
 
-    val lss = pools.select($"key_hash")
-      .join(broadcast(lastSwap), Seq("key_hash"), "left")
-      .join(broadcast(lastInit), Seq("key_hash"), "left")
-      .select(
-        $"key_hash",
-        coalesce($"swap_event_id", $"init_event_id").as("last_swap_event_id"),
-        coalesce($"sqrt_ratio_after", $"init_sqrt_ratio").as("sqrt_ratio"),
-        coalesce($"tick_after", $"init_tick").as("tick"),
-        coalesce($"liquidity_after", lit(0)).as("liquidity_last"))
+    // 2. every source row feeds its pool's row (kind 0); a position update
+    // also feeds its two tick bounds (kind 1) and an order its start and
+    // end times (kind 2), the latter only after the pool's last execution
+    def entry(kind: Int, src: Column, pos: Column, s0: Column, s1: Column): Column =
+      struct(lit(kind).as("kind"), src.cast(IntegerType).as("src"), pos.cast(LongType).as("pos"),
+        s0.cast(dec38).as("s0"), s1.cast(dec38).as("s1"))
+    val none = lit(null)
+    val own = entry(0, $"src", none, none, none)
+    val entries = when($"src" === Update, array(own,
+        entry(1, none, $"t", $"x", $"x"), entry(1, none, $"u", -$"x", $"x")))
+      .when($"src" === Order, array(own,
+        entry(2, none, $"t", $"x", $"y"), entry(2, none, $"u", -$"x", -$"y")))
+      .otherwise(array(own))
 
-    val lastUpdate = updates
-      .groupBy($"pool_key_hash".as("key_hash"))
-      .agg(max($"event_id").as("last_update_event_id"))
+    def from(src: Int, c: Column): Column = when($"e.src" === src, c)
+    // the source's last event, one scalar `max_by` per column (a struct
+    // buffer would force a sort-based aggregate): `swap_eid`, `swap_a`, …
+    val names = Map(Swap -> "swap", Init -> "init", Execution -> "exec")
+    def lastOf(src: Int, cols: String*): Seq[Column] =
+      cols.map(c => max_by(col(c), from(src, $"eid")).as(s"${names(src)}_$c"))
+    val since = $"e.src" === Update && $"eid" > $"w_swap_eid" &&
+      $"w_tick".between($"t", $"u" - 1)
+    val active = $"e.src" === Order && $"eid" > $"w_exec_eid" &&
+      $"t" <= $"w_exec_time" && $"u" > $"w_exec_time"
+    val aggregates =
+      Seq(max(from(Pool, lit(true))).as("in_pools")) ++
+      lastOf(Swap, "eid", "a", "t", "x") ++
+      lastOf(Init, "eid", "a", "t") ++
+      lastOf(Execution, "eid", "t", "u", "x", "y") ++
+      Seq(
+        max(from(Update, $"eid")).as("last_update_event_id"),
+        sum(when(since, $"x")).as("liq_since"),
+        sum(when(active, $"x")).as("d0"),
+        sum(when(active, $"y")).as("d1"),
+        max(when(active, $"eid")).as("last_order_update_event_id"),
+        max(from(Placed, $"eid")).as("placed_id"),
+        max(from(Closed, $"eid")).as("closed_id"),
+        max(from(Snapshot, lit(true))).as("has_snapshot"),
+        max(from(Snapshot, $"t")).as("last_snapshot"),
+        max(from(Spline, lit(true))).as("has_spline"),
+        sum($"e.s0").as("s0"),
+        sum($"e.s1").as("s1"))
 
-    // decorrelated scalar subquery (dao.ts:407-417): liquidity deltas after
-    // the last swap, only for positions straddling the current tick.
-    val liqSince = updates.as("pu")
-      .join(broadcast(lss.as("lss")),
-        $"pu.pool_key_hash" === $"lss.key_hash" &&
-          $"pu.event_id" > $"lss.last_swap_event_id" &&
-          $"lss.tick".between($"pu.lower_bound", $"pu.upper_bound" - 1))
-      .groupBy($"lss.key_hash".as("key_hash"))
-      .agg(sum($"pu.liquidity_delta").as("liq_delta_since"))
-
-    lss
-      .join(broadcast(lastUpdate), Seq("key_hash"), "left")
-      .join(broadcast(liqSince), Seq("key_hash"), "left")
-      .select(
-        $"key_hash".as("pool_key_hash"),
-        $"sqrt_ratio",
-        $"tick".cast(LongType).as("tick"),
-        (coalesce($"liquidity_last", lit(0)).cast(dec30) +
-          coalesce($"liq_delta_since", lit(0)).cast(dec30))
-          .cast(dec38).as("liquidity"),
-        greatest($"last_swap_event_id", $"last_update_event_id").as("last_event_id"),
-        $"last_update_event_id".as("last_liquidity_update_event_id"))
+    // 3. each pool's state as the views read it; the keyed rows carry only
+    // their two sums, and those that cancel out are dropped
+    val lastEvent = greatest(coalesce($"swap_eid", $"init_eid"), $"last_update_event_id")
+    def ifExecuted(c: Column): Column = when($"exec_u".isNotNull, c)
+    def plus(rate: Column, delta: Column): Column =
+      (rate.cast(dec30) + coalesce(delta, lit(0)).cast(dec30)).cast(dec38)
+    val poolState = struct(
+      $"in_pools",
+      coalesce($"swap_a", $"init_a").as("sqrt_ratio"),
+      coalesce($"swap_t", $"init_t").as("tick"),
+      plus(coalesce($"swap_x", lit(0)), $"liq_since").as("liquidity"),
+      lastEvent.as("last_event_id"),
+      $"last_update_event_id".as("last_liquidity_update_event_id"),
+      ifExecuted(plus($"exec_x", $"d0")).as("token0_sale_rate"),
+      ifExecuted(plus($"exec_y", $"d1")).as("token1_sale_rate"),
+      ifExecuted($"exec_t").as("last_virtual_execution_time"),
+      ifExecuted(greatest(coalesce($"last_order_update_event_id", $"exec_eid"), lastEvent))
+        .as("twamm_last_event_id"),
+      $"placed_id", $"closed_id", $"has_snapshot", $"last_snapshot", $"has_spline")
+    compared.select($"*", explode(entries).as("e"))
+      .filter($"e.kind" =!= 2 || ($"w_in_pools" && $"w_exec_time" < $"e.pos"))
+      .groupBy($"pool_key_hash", $"e.kind".as("kind"), $"e.pos".as("pos"))
+      .agg(aggregates.head, aggregates.tail: _*)
+      .filter($"kind" === 0 || $"s0" =!= 0 || ($"kind" === 2 && $"s1" =!= 0))
+      .select($"pool_key_hash", $"kind", $"pos", when($"kind" === 0, poolState).as("pool"), $"s0", $"s1")
   }
+
+  /** The tier's pool rows for pools in `pool_keys`. */
+  private[queries] def pooled(tier: DataFrame): DataFrame =
+    tier.filter(col("kind") === 0 && col("pool.in_pools"))
+
+  /** pool_states_view (dao.ts:384-433): latest swap ∨ initialization per pool
+    * plus liquidity deltas applied since the last swap, counted only when the
+    * position straddles the current tick; one row per `pool_keys` pool. */
+  def poolStatesOf(tier: DataFrame): DataFrame =
+    pooled(tier).select(col("pool_key_hash"), col("pool.sqrt_ratio"), col("pool.tick"),
+      col("pool.liquidity"), col("pool.last_event_id"), col("pool.last_liquidity_update_event_id"))
+
+  /** [[poolStatesOf]] over explicit pool, swap, initialization and
+    * position-update tables (unit-testable). */
+  def poolStatesFrom(spark: SparkSession, pools: DataFrame, swaps: DataFrame,
+      inits: DataFrame, updates: DataFrame): DataFrame =
+    poolStatesOf(tierFrom(spark,
+      Facts.empty(spark).copy(pools = pools, swaps = swaps, inits = inits, updates = updates)))
 
   /** pool_states as a reusable oracle CTE chain (twamm/limit views read the
     * materialized pool states, dao.ts:803,865). */
@@ -133,36 +287,21 @@ object CoreViews {
   val poolStatesOracle: String =
     Fixtures.oracle(poolStatesCtes + "\nSELECT * FROM pool_states_cte")
 
-  /** per_pool_per_tick_liquidity_view (dao.ts:475-499): net + total liquidity
-    * per (pool, tick bound); two-level re-aggregation after UNION ALL with a
-    * HAVING-style post-filter. The reference's trigger-maintained incremental
-    * twin (dao.ts:501-647) is replaced by this declarative recompute — at
-    * scale it is a map-side-combined shuffle on (pool, tick), no trigger state.
-    */
-  def tickLiquidity(spark: SparkSession, sfDir: String): DataFrame =
-    graft.util.Memo.checkpointed(spark, sfDir, "tick_liquidity") {
-      Fixtures.register(spark, sfDir)
-      tickLiquidityFrom(spark, spark.table("position_updates"))
-    }
+  /** per_pool_per_tick_liquidity_view (dao.ts:475-499): net + total
+    * liquidity per (pool, tick bound), bounds whose net is zero dropped.
+    * Decimal-typed; `Analytics.poolMarketDepth` reads it. */
+  def tickLiquidity(spark: SparkSession, sfDir: String): DataFrame = tickLiquidityOf(tier(spark, sfDir))
 
-  /** Pipeline over an explicit input (unit-testable). */
-  def tickLiquidityFrom(spark: SparkSession, pu: DataFrame): DataFrame = {
-    import spark.implicits._
-    val lower = pu.groupBy($"pool_key_hash", $"lower_bound".as("tick"))
-      .agg(sum($"liquidity_delta").as("net"), sum($"liquidity_delta").as("tot"))
-    val upper = pu.groupBy($"pool_key_hash", $"upper_bound".as("tick"))
-      .agg(sum(negate($"liquidity_delta")).as("net"), sum($"liquidity_delta").as("tot"))
+  def tickLiquidityOf(tier: DataFrame): DataFrame =
+    tier.filter(col("kind") === 1).select(
+      col("pool_key_hash"),
+      col("pos").as("tick"),
+      col("s0").as("net_liquidity_delta_diff"),
+      col("s1").as("total_liquidity_on_tick"))
 
-    lower.unionByName(upper)
-      .groupBy($"pool_key_hash", $"tick")
-      .agg(sum($"net").as("net"), sum($"tot").as("tot"))
-      .filter($"net" =!= 0)
-      .select(
-        $"pool_key_hash",
-        $"tick".cast(LongType).as("tick"),
-        $"net".cast(dec38).as("net_liquidity_delta_diff"),
-        $"tot".cast(dec38).as("total_liquidity_on_tick"))
-  }
+  /** [[tickLiquidityOf]] over an explicit position-update table (unit-testable). */
+  def tickLiquidityFrom(spark: SparkSession, pu: DataFrame): DataFrame =
+    tickLiquidityOf(tierFrom(spark, Facts.empty(spark).copy(updates = pu)))
 
   val tickLiquidityCtes: String =
     """, all_tick_deltas AS (
@@ -184,16 +323,18 @@ object CoreViews {
   val tickLiquidityOracle: String =
     Fixtures.oracle(tickLiquidityCtes + "\nSELECT * FROM tick_liquidity_cte")
 
-  // Registered query outputs canonicalize DECIMAL columns to BIGINT (values
-  // fit int64; internal arithmetic stays decimal-exact, and downstream
-  // consumers — Twamm, Analytics — keep the decimal-typed views above).
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pool_states" -> ((s: SparkSession, d: String) =>
-      poolStates(s, d).withColumn("liquidity", col("liquidity").cast(LongType))),
-    "per_pool_per_tick_liquidity" -> ((s: SparkSession, d: String) =>
-      tickLiquidity(s, d)
-        .withColumn("net_liquidity_delta_diff", col("net_liquidity_delta_diff").cast(LongType))
-        .withColumn("total_liquidity_on_tick", col("total_liquidity_on_tick").cast(LongType))))
+  /** This object's catalog views as projections of a tier frame. Their
+    * outputs canonicalize DECIMAL columns to BIGINT (values fit int64;
+    * internal arithmetic stays decimal-exact, and `Analytics` keeps the
+    * decimal-typed views above). */
+  val views: Map[String, DataFrame => DataFrame] = Map(
+    "pool_states" -> (t => poolStatesOf(t).withColumn("liquidity", col("liquidity").cast(LongType))),
+    "per_pool_per_tick_liquidity" -> (t => tickLiquidityOf(t)
+      .withColumn("net_liquidity_delta_diff", col("net_liquidity_delta_diff").cast(LongType))
+      .withColumn("total_liquidity_on_tick", col("total_liquidity_on_tick").cast(LongType))))
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    views.map { case (n, v) => n -> ((s: SparkSession, d: String) => v(tier(s, d))) }
 
   val oracles: Map[String, String] = Map(
     "pool_states" -> Fixtures.oracle(poolStatesCtes +

@@ -7,72 +7,22 @@ import org.apache.spark.sql.types._
 import graft.fixtures.Fixtures
 
 /** TWAMM / limit-order / oracle / spline operational state views
-  * (dao.ts:765-880, 1025-1036).
-  *
-  * All are per-pool "current state" aggregates: group-max (`max_by`) over the
-  * fact tables plus small broadcast joins; at scale the heavy side is a single
-  * map-side-combined shuffle per fact table, and everything after the groupBy
-  * is dimension-sized (one row per pool).
+  * (dao.ts:765-880, 1025-1036), as projections of the per-pool tier
+  * ([[CoreViews.tier]]): the last virtual execution, its block time and the
+  * sale-rate sums since it, the last placed and closed limit orders, the
+  * last oracle snapshot and the spline flag are all columns of a pool's row
+  * there, and the sale-rate schedule is the tier's kind-2 rows.
   */
 object Twamm {
 
-  private val dec38 = DecimalType(38, 0)
-  private val dec30 = DecimalType(30, 0)
-
-  /** Pool-states last_event_id, broadcast-sized helper (the reference's
-    * twamm/limit views read pool_states_materialized, dao.ts:803,865). */
-  private def psLastEvent(spark: SparkSession, sfDir: String): DataFrame =
-    CoreViews.poolStates(spark, sfDir)
-      .select(col("pool_key_hash").as("key_hash"), col("last_event_id").as("ps_last_event_id"))
-
   /** twamm_pool_states_view (dao.ts:765-805): sale rates at the last virtual
     * order execution plus deltas of orders placed after it that straddle the
-    * execution time (theta-join J5, kept hash-joinable by the key_hash
-    * equi-part with the range conditions as residual filters). */
-  def twammPoolStates(spark: SparkSession, sfDir: String): DataFrame =
-    graft.util.Memo.checkpointed(spark, sfDir, "twamm_pool_states") {
-      twammPoolStatesImpl(spark, sfDir)
-    }
-
-  private def twammPoolStatesImpl(spark: SparkSession, sfDir: String): DataFrame = {
-    Fixtures.register(spark, sfDir)
-    import spark.implicits._
-
-    val voe = spark.table("twamm_virtual_order_executions")
-    val blocks = spark.table("blocks").select($"number", $"time")
-
-    val lvoe = voe.groupBy($"key_hash")
-      .agg(max_by(struct($"event_id", $"token0_sale_rate", $"token1_sale_rate"), $"event_id").as("v"))
-      .select($"key_hash", $"v.event_id".as("lvoe_event_id"),
-        $"v.token0_sale_rate", $"v.token1_sale_rate")
-      .withColumn("block_number", graft.ingest.Ingest.blockOf($"lvoe_event_id"))
-      .join(broadcast(blocks), $"block_number" === $"number")
-      .select($"key_hash", $"lvoe_event_id", $"token0_sale_rate", $"token1_sale_rate",
-        $"time".as("last_virtual_execution_time"))
-
-    val active = spark.table("twamm_order_updates").as("tou")
-      .join(broadcast(lvoe.as("l")),
-        $"tou.key_hash" === $"l.key_hash" &&
-          $"tou.event_id" > $"l.lvoe_event_id" &&
-          $"tou.start_time" <= $"l.last_virtual_execution_time" &&
-          $"tou.end_time" > $"l.last_virtual_execution_time")
-      .groupBy($"l.key_hash".as("key_hash"))
-      .agg(sum($"tou.sale_rate_delta0").as("d0"), sum($"tou.sale_rate_delta1").as("d1"),
-        max($"tou.event_id").as("last_order_update_event_id"))
-
-    lvoe
-      .join(psLastEvent(spark, sfDir), Seq("key_hash"))
-      .join(broadcast(active), Seq("key_hash"), "left")
-      .select(
-        $"key_hash".as("pool_key_hash"),
-        ($"token0_sale_rate".cast(dec30) + coalesce($"d0", lit(0)).cast(dec30))
-          .cast(dec38).as("token0_sale_rate"),
-        ($"token1_sale_rate".cast(dec30) + coalesce($"d1", lit(0)).cast(dec30))
-          .cast(dec38).as("token1_sale_rate"),
-        $"last_virtual_execution_time",
-        greatest(coalesce($"last_order_update_event_id", $"lvoe_event_id"),
-          $"ps_last_event_id").as("last_event_id"))
-  }
+    * execution time; only pools in pool_states whose last execution's block
+    * is in `blocks`. Decimal-typed. */
+  def twammPoolStatesOf(tier: DataFrame): DataFrame =
+    CoreViews.pooled(tier).filter(col("pool.twamm_last_event_id").isNotNull).select(
+      col("pool_key_hash"), col("pool.token0_sale_rate"), col("pool.token1_sale_rate"),
+      col("pool.last_virtual_execution_time"), col("pool.twamm_last_event_id").as("last_event_id"))
 
   /** twamm pool states as reusable oracle CTEs. */
   val twammPoolStatesCtes: String =
@@ -119,33 +69,13 @@ object Twamm {
 
   /** twamm_sale_rate_deltas (materialized semantics, dao.ts:817-851): future
     * sale-rate change schedule — only times strictly after the pool's last
-    * virtual execution. */
-  def twammSaleRateDeltas(spark: SparkSession, sfDir: String): DataFrame = {
-    Fixtures.register(spark, sfDir)
-    import spark.implicits._
-
-    val tou = spark.table("twamm_order_updates")
-    val starts = tou.groupBy($"key_hash", $"start_time".as("time"))
-      .agg(sum($"sale_rate_delta0").as("d0"), sum($"sale_rate_delta1").as("d1"))
-    val ends = tou.groupBy($"key_hash", $"end_time".as("time"))
-      .agg(sum(negate($"sale_rate_delta0")).as("d0"), sum(negate($"sale_rate_delta1")).as("d1"))
-
-    val summed = starts.unionByName(ends)
-      .groupBy($"key_hash", $"time")
-      .agg(sum($"d0").as("d0"), sum($"d1").as("d1"))
-      .filter($"d0" =!= 0 || $"d1" =!= 0)
-
-    val tps = twammPoolStates(spark, sfDir)
-      .select($"pool_key_hash".as("key_hash"), $"last_virtual_execution_time")
-
-    summed.join(broadcast(tps), Seq("key_hash"))
-      .filter($"last_virtual_execution_time" < $"time")
-      .select(
-        $"key_hash".as("pool_key_hash"),
-        $"time",
-        $"d0".cast(LongType).as("net_sale_rate_delta0"),
-        $"d1".cast(LongType).as("net_sale_rate_delta1"))
-  }
+    * virtual execution, and only changes that do not cancel out. */
+  def saleRateDeltasOf(tier: DataFrame): DataFrame =
+    tier.filter(col("kind") === 2).select(
+      col("pool_key_hash"),
+      col("pos").as("time"),
+      col("s0").cast(LongType).as("net_sale_rate_delta0"),
+      col("s1").cast(LongType).as("net_sale_rate_delta1"))
 
   val twammSaleRateDeltasOracle: String = Fixtures.oracle(
     CoreViews.poolStatesCtes + twammPoolStatesCtes +
@@ -169,24 +99,13 @@ object Twamm {
          ON t.pool_key_hash = s.key_hash AND t.last_virtual_execution_time < s.time
        WHERE s.d0 != 0 OR s.d1 != 0""")
 
-  /** limit_order_pool_states_view (dao.ts:853-873). */
-  def limitOrderPoolStates(spark: SparkSession, sfDir: String): DataFrame = {
-    Fixtures.register(spark, sfDir)
-    import spark.implicits._
-
-    val llop = spark.table("limit_order_placed")
-      .groupBy($"key_hash").agg(max($"event_id").as("placed_id"))
-    val lloc = spark.table("limit_order_closed")
-      .groupBy($"key_hash").agg(max($"event_id").as("closed_id"))
-
-    llop
-      .join(psLastEvent(spark, sfDir), Seq("key_hash"))
-      .join(broadcast(lloc), Seq("key_hash"), "left")
-      .select(
-        $"key_hash".as("pool_key_hash"),
-        greatest(greatest($"placed_id", coalesce($"closed_id", lit(0L))),
-          $"ps_last_event_id").as("last_event_id"))
-  }
+  /** limit_order_pool_states_view (dao.ts:853-873): pools in pool_states
+    * with a placed order. */
+  def limitOrderPoolStatesOf(tier: DataFrame): DataFrame =
+    CoreViews.pooled(tier).filter(col("pool.placed_id").isNotNull).select(
+      col("pool_key_hash"),
+      greatest(greatest(col("pool.placed_id"), coalesce(col("pool.closed_id"), lit(0L))),
+        col("pool.last_event_id")).as("last_event_id"))
 
   val limitOrderPoolStatesOracle: String = Fixtures.oracle(
     CoreViews.poolStatesCtes +
@@ -198,40 +117,37 @@ object Twamm {
        JOIN pool_states_cte ps ON p.key_hash = ps.pool_key_hash
        LEFT JOIN lloc c ON p.key_hash = c.key_hash""")
 
-  /** oracle_pool_states_view (dao.ts:1025-1036). */
-  def oraclePoolStates(spark: SparkSession, sfDir: String): DataFrame = {
-    Fixtures.register(spark, sfDir)
-    import spark.implicits._
-    spark.table("oracle_snapshots")
-      .groupBy($"key_hash".as("pool_key_hash"))
-      .agg(max($"snapshot_block_timestamp").as("last_snapshot_block_timestamp"))
-  }
+  /** oracle_pool_states_view (dao.ts:1025-1036): every pool with a snapshot. */
+  def oraclePoolStatesOf(tier: DataFrame): DataFrame =
+    tier.filter(col("kind") === 0 && col("pool.has_snapshot"))
+      .select(col("pool_key_hash"), col("pool.last_snapshot").as("last_snapshot_block_timestamp"))
 
   val oraclePoolStatesOracle: String = Fixtures.oracle(
     """SELECT key_hash AS pool_key_hash,
               MAX(snapshot_block_timestamp) AS last_snapshot_block_timestamp
        FROM oracle_snapshots GROUP BY key_hash""")
 
-  /** spline_pools_materialized (dao.ts:875-880). */
-  def splinePools(spark: SparkSession, sfDir: String): DataFrame = {
-    Fixtures.register(spark, sfDir)
-    spark.table("liquidity_updated").select("pool_key_hash").distinct()
-  }
+  /** spline_pools_materialized (dao.ts:875-880): distinct pools with a
+    * liquidity update. */
+  def splinePoolsOf(tier: DataFrame): DataFrame =
+    tier.filter(col("kind") === 0 && col("pool.has_spline")).select(col("pool_key_hash"))
 
   val splinePoolsOracle: String = Fixtures.oracle(
     "SELECT DISTINCT pool_key_hash FROM liquidity_updated")
 
-  // twamm_pool_states output canonicalizes sale rates to BIGINT; the memoized
-  // decimal-typed view above stays unchanged for downstream consumers.
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "twamm_pool_states" -> ((s: SparkSession, d: String) =>
-      twammPoolStates(s, d)
-        .withColumn("token0_sale_rate", col("token0_sale_rate").cast(LongType))
-        .withColumn("token1_sale_rate", col("token1_sale_rate").cast(LongType))),
-    "twamm_sale_rate_deltas" -> (twammSaleRateDeltas _),
-    "limit_order_pool_states" -> (limitOrderPoolStates _),
-    "oracle_pool_states" -> (oraclePoolStates _),
-    "spline_pools" -> (splinePools _))
+  /** This object's catalog views as projections of a tier frame;
+    * twamm_pool_states canonicalizes its sale rates to BIGINT. */
+  val views: Map[String, DataFrame => DataFrame] = Map(
+    "twamm_pool_states" -> (t => twammPoolStatesOf(t)
+      .withColumn("token0_sale_rate", col("token0_sale_rate").cast(LongType))
+      .withColumn("token1_sale_rate", col("token1_sale_rate").cast(LongType))),
+    "twamm_sale_rate_deltas" -> (saleRateDeltasOf _),
+    "limit_order_pool_states" -> (limitOrderPoolStatesOf _),
+    "oracle_pool_states" -> (oraclePoolStatesOf _),
+    "spline_pools" -> (splinePoolsOf _))
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    views.map { case (n, v) => n -> ((s: SparkSession, d: String) => v(CoreViews.tier(s, d))) }
 
   val oracles: Map[String, String] = Map(
     "twamm_pool_states" -> twammPoolStatesOracle,

@@ -5,13 +5,16 @@ import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped memo for shared sub-plans.
   *
-  * Several catalog views are consumed by other views (pool_states feeds the
-  * twamm/limit views, the hourly rollups feed the 24h stats, the exploded
+  * Several catalog views are consumed by other views (the per-pool
+  * operational tier, `CoreViews.tier`, feeds all seven operational views and
+  * the market depth, the hourly rollups feed the 24h stats, the exploded
   * embedding elements feed all three similarity queries). Without a memo each
   * downstream query re-plans and re-executes the whole upstream tree; with it
   * the first use persists the (dimension-sized) intermediate and later uses
   * are cache scans — the batch analogue of the reference's materialized-view
-  * tiers (dao.ts:1798-1807).
+  * tiers (dao.ts:1798-1807). The operational tier is one [[checkpointed]]
+  * frame per refresh: its broadcast, its one shuffle's map stage and the
+  * checkpoint are three jobs, and each view after it is a narrow projection.
   *
   * Lifecycle: frames accumulate for as long as a (session, sfDir) scope is
   * live — fine for a bench/verify run, a leak on a long-lived cluster where
