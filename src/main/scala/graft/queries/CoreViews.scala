@@ -284,9 +284,6 @@ object CoreViews {
          LEFT JOIN last_upd u ON l.key_hash = u.pool_key_hash
          LEFT JOIN liq_since q ON l.key_hash = q.key_hash)"""
 
-  val poolStatesOracle: String =
-    Fixtures.oracle(poolStatesCtes + "\nSELECT * FROM pool_states_cte")
-
   /** per_pool_per_tick_liquidity_view (dao.ts:475-499): net + total
     * liquidity per (pool, tick bound), bounds whose net is zero dropped.
     * Decimal-typed; `Analytics.poolMarketDepth` reads it. */
@@ -319,9 +316,6 @@ object CoreViews {
                 CAST(SUM(tot) AS DECIMAL(38,0)) AS total_liquidity_on_tick
          FROM all_tick_deltas GROUP BY pool_key_hash, tick
          HAVING SUM(net) != 0)"""
-
-  val tickLiquidityOracle: String =
-    Fixtures.oracle(tickLiquidityCtes + "\nSELECT * FROM tick_liquidity_cte")
 
   /** This object's catalog views as projections of a tier frame. Their
     * outputs canonicalize DECIMAL columns to BIGINT (values fit int64;

@@ -81,7 +81,7 @@ class OpTierBudgetSpec extends SparkSpec {
   // cache (100 entries). Counted from an emptied cache, each class compiles
   // once, so the count is the working set. A warm pass is not asserted to
   // compile nothing: the cache is four LRU segments of 25 entries, so a
-  // working set of about 90 still overflows a segment or two, depending on
+  // working set of 96 still overflows one to three segments, depending on
   // how this JVM hashes the keys; and each whole-stage class takes two
   // entries, because the key includes the class loader and the driver and
   // the executor threads each compile it.
