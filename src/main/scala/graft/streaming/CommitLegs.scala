@@ -8,8 +8,9 @@ import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.SQLExecution
 
 /** Runs a micro-batch's independent commit legs at the same time: the
-  * fact parquet write, the relational leg and the pending-store replace in
-  * [[StreamDriver.processBatch]], and the per-table appends inside
+  * fact parquet write and the relational leg in
+  * [[StreamDriver.processBatch]] (with the pending-head collect beside
+  * them), and the per-table appends inside
   * [[JdbcMultiTableSink.write]]. Each leg runs under
   * `SQLExecution.withThreadLocalCaptured`, so its Spark jobs carry the
   * caller's local properties (the streaming query's job group included:

@@ -179,13 +179,14 @@ final class JdbcMultiTableSink(
     * but that read-then-write is only safe for a single writer; the
     * reference instead lets the DATABASE arbitrate, which stays correct
     * under batch replays and concurrent writers without re-reading the
-    * dim. This write is distributed: each partition binds the dialect's
-    * prepared insert-ignore (bind ORDER comes from the dialect — the two
-    * dialects place the key parameters differently) and executes it in
-    * JDBC batches. The dim table must exist with a unique/PK constraint on
-    * `keyCols` ([[ensureDimTable]]): Postgres's ON CONFLICT needs the
-    * conflict target to be backed by one, so requiring it keeps the two
-    * dialects semantically identical rather than Derby-MERGE-lenient. */
+    * dim. The write runs as one task on one connection: it binds the
+    * dialect's prepared insert-ignore (bind ORDER comes from the dialect —
+    * the two dialects place the key parameters differently) and executes
+    * it in JDBC batches. The dim table must exist with a unique/PK
+    * constraint on `keyCols` ([[ensureDimTable]]): Postgres's ON CONFLICT
+    * needs the conflict target to be backed by one, so requiring it keeps
+    * the two dialects semantically identical rather than
+    * Derby-MERGE-lenient. */
   def writeDim(table: String, frame: DataFrame, keyCols: Seq[String],
       batchSize: Int = 1000): Unit = {
     val cols = frame.columns.toSeq
@@ -194,12 +195,17 @@ final class JdbcMultiTableSink(
     val (sql, bindOrder) = dialect.insertIgnore(table, cols, keyCols)
     val bindIdx = bindOrder.map(cols.indexOf)
     val (u, p, bs) = (url, connectionProperties, batchSize)
-    // consistent lock order: each batch transaction touches keys in
-    // ascending order, so two concurrent partitions inserting overlapping
-    // keys cannot deadlock (40P01 — observed on live Postgres, whose
-    // pipelined batches hold row locks until the transaction's Sync;
-    // sorting is the canonical fix and costs one in-partition sort)
-    frame.sortWithinPartitions(keyCols.map(org.apache.spark.sql.functions.col): _*)
+    // one connection per dim write: dims are small, and concurrent
+    // partitions running the same Derby MERGE on separate connections
+    // share its cached plan, whose per-execution state
+    // (`MatchingClauseConstantAction._actionRS`) one connection can clear
+    // under another, failing the write with an NPE or a duplicate key
+    // (never with Derby's statement cache off, or with one partition).
+    // Keys go in ascending order, so two concurrent writers
+    // inserting overlapping keys cannot deadlock (40P01 — observed on live
+    // Postgres, whose pipelined batches hold row locks until the
+    // transaction's Sync)
+    frame.coalesce(1).sortWithinPartitions(keyCols.map(col): _*)
       .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       if (rows.nonEmpty) {
         val conn = DriverManager.getConnection(u, p)

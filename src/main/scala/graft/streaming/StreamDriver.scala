@@ -22,27 +22,32 @@ import graft.sources.v2.BlockFeedProvider.{ControlCol, ControlInvalidate, Invali
   *    the last committed batch;
   *  - a reorg message retracts a block suffix by partition-pruned rewrite
   *    (T3): every fact's event_id embeds the block number;
-  *  - two-tier refresh (T5): operational views recompute every batch;
-  *    analytical rollups only when `batchId % analyticalEvery == 0` — the
-  *    reference's 5-minute throttle expressed in batches; the incremental
-  *    variant recomputes only `hour >= watermark` partitions (T6).
+  *  - two-tier refresh (T5): after each data batch `onOperationalRefresh`
+  *    is called with the batch's canonical rows plus its surviving pending
+  *    head (the operational views themselves still read the fixture facts,
+  *    not the ingested ones); analytical rollups run only when
+  *    `batchId % analyticalEvery == 0` — the reference's 5-minute throttle
+  *    expressed in batches; the incremental variant recomputes only
+  *    `hour >= watermark` partitions (T6).
   *
   *  - pending (unfinalized head) rows, flagged by an optional `is_pending`
   *    column, are processed and served operationally but never committed as
-  *    canonical (T4, index.ts:137,243-246): they live in a side store that
-  *    each batch replaces, the finalized re-emission supersedes them without
-  *    a reorg (within one batch too: a pending row whose block the batch
-  *    also accepts never reaches the store), and restarts/retracts drop the
-  *    store (the source re-emits the head because the cursor never advanced
-  *    past it).
+  *    canonical (T4, index.ts:137,243-246): they form a pending head held in
+  *    driver memory, which each data batch replaces; the finalized
+  *    re-emission supersedes them without a reorg (within one batch too: a
+  *    pending row whose block the batch also accepts never reaches the
+  *    head), and restarts/retracts empty it. The head is visible only to the
+  *    driver instance that processed it; after a restart the source re-emits
+  *    it, because the cursor never advanced past it.
   *
   *  - a micro-batch reads its source once (one persisted input, one
   *    Spark job that builds the cache and summarizes it) and then commits
-  *    through three legs at the same time, each with tasks sized to the
-  *    batch's rows: the fact parquet write, the relational leg and the
-  *    pending-store replace. What stays ordered: dims, then facts, then
-  *    cursor inside the relational leg; all legs, then the operational
-  *    refresh, then the analytical hook (see [[processBatch]]).
+  *    through two legs at the same time, each with tasks sized to the
+  *    batch's rows: the fact parquet write and the relational leg; the
+  *    pending head is collected from the cache beside them. What stays
+  *    ordered: dims, then facts, then cursor inside the relational leg; both
+  *    legs, then the operational refresh, then the analytical hook (see
+  *    [[processBatch]]).
   *
   * Event-time watermarks/session windows are deliberately absent: blockchain
   * order is total, and "late data" manifests only as reorgs (T8).
@@ -63,7 +68,6 @@ final class StreamDriver(
     analyticalEvery: Long = 10L,
     onOperationalRefresh: DataFrame => Unit = _ => (),
     onAnalyticalRefresh: Long => Unit = _ => (),
-    jdbcSink: Option[JdbcBatchSink] = None,
     multiTableSink: Option[(JdbcMultiTableSink, DataFrame => Map[String, DataFrame])] = None,
     multiTableDims: Seq[(String, Seq[String], DataFrame => DataFrame)] = Nil) {
 
@@ -88,12 +92,12 @@ final class StreamDriver(
     * the cursor (S11): restarting with the same checkpointRoot resumes after
     * the last committed batch. */
   def start(source: graft.sources.BlockSource, trigger: Trigger): StreamingQuery = {
-    // T4 startup cleanup: the pending store is the uncommitted head suffix —
+    // T4 startup cleanup: the pending head is the uncommitted head suffix —
     // only valid relative to the live stream position at the moment it was
-    // written. After a restart the source re-emits the head (the reference
+    // collected. After a restart the source re-emits the head (the reference
     // never advances its cursor past pending data, index.ts:243-246), so a
     // stale pending suffix would double it.
-    dropPending()
+    pendingHead = None
     // multi-table relational leg: delete any batch the cursor never
     // acknowledged (a crash between the fact appends and the cursor write);
     // the checkpoint replay below then rewrites it — the reference's
@@ -126,14 +130,16 @@ final class StreamDriver(
     * bucket, opens one connection per table and refreshes one partition;
     * a backfill batch of thousands keeps several tasks.
     *
-    * Concurrent legs ([[CommitLegs]]): after the summary, three
-    * independent writes run at the same time — the fact parquet write, the
-    * relational leg (`JdbcBatchSink`, then `JdbcMultiTableSink`, ordered
-    * inside: dims, then facts, then cursor) and the pending-store replace.
-    * All legs finish before the operational refresh, and the refresh before
-    * the analytical hook; a failed leg fails the batch only after every
-    * other leg has stopped, so no refresh ever sees a half-written batch and
-    * the checkpoint replay reruns all three (each is idempotent).
+    * Concurrent legs ([[CommitLegs]]): after the summary, two independent
+    * writes run at the same time — the fact parquet write and the
+    * relational leg (`JdbcMultiTableSink`, ordered inside: dims, then facts,
+    * then cursor) — and the batch's pending head is collected from the cache
+    * beside them. Both legs finish before the new head replaces the old
+    * one, before the operational refresh, and the refresh before the
+    * analytical hook; a failed leg fails the batch only after every other
+    * leg has stopped, so no refresh ever sees a half-written batch, the
+    * previous pending head stays in place, and the checkpoint replay reruns
+    * both legs (each is idempotent).
     *
     * Idempotency is scoped to the batch: partitions are
     * `batch_id=N/block_bucket=M`, so a checkpoint replay of batch N
@@ -159,7 +165,7 @@ final class StreamDriver(
 
     val cutoff = retractCutoffFor(batchId)
     // the finally must cover EVERY consumer: a transient failure in any leg
-    // (parquet write, JDBC outage, pending-store write) would otherwise
+    // (parquet write, JDBC outage, pending-head collect) would otherwise
     // strand the batch-sized cache in the CacheManager for the session's
     // lifetime, one leak per failed-and-replayed batch
     val input = batch.persist()
@@ -200,7 +206,7 @@ final class StreamDriver(
     // would land in the __HIVE_DEFAULT_PARTITION__ bucket, outside every
     // reorg predicate) — malformed input, dropped at the boundary. The
     // retract-ledger replay guard applies to pending rows too: a checkpoint
-    // replay of a pre-reorg batch must not repopulate the pending store
+    // replay of a pre-reorg batch must not repopulate the pending head
     // (and the operational view) with retracted blocks.
     def keyed(rows: Column): DataFrame = {
       val k = sized.filter(col("block_number").isNotNull && rows)
@@ -213,12 +219,12 @@ final class StreamDriver(
     // T4: a batch may carry PENDING (unfinalized head) rows, flagged by an
     // optional `is_pending` column (index.ts:137). They are processed —
     // visible to operational consumers this tick — but never become
-    // canonical: they land in the pending store, which each batch replaces
+    // canonical: they form the pending head, which each batch replaces
     // wholesale (the pending head is whatever THIS batch says it is; the
     // finalized re-emission of the same block arrives later as a normal
     // canonical row, so the swap needs no reorg). A pending row whose
     // block this same batch also accepts is already superseded and never
-    // reaches the store.
+    // reaches the head.
     val canonicalRows = !isPending(input)
     val pendingRows = Option.when(s.pendingBlocks.nonEmpty)(
       isPending(input) && col("block_number").isin(s.pendingBlocks: _*))
@@ -235,13 +241,12 @@ final class StreamDriver(
         .parquet(s"$factRoot/raw_events")
 
     // relational leg (BASELINE's "JDBC sink to Postgres"): canonical rows
-    // only — the pending head stays in its replaceable side store. The
-    // multi-table half routes the batch into per-processor fact frames (the
-    // reference DAO's ~24 tables, dao.ts:1895-2893) and writes them with the
-    // cursor-as-commit-marker protocol; an all-filtered replay batch has no
-    // end block and moves no cursor.
-    val relationalLeg = () => {
-      jdbcSink.foreach(_.write(canonical, batchId))
+    // only — the pending head stays in driver memory. The sink routes the
+    // batch into per-processor fact frames (the reference DAO's ~24 tables,
+    // dao.ts:1895-2893) and writes them with the cursor-as-commit-marker
+    // protocol; an all-filtered replay batch has no end block and moves no
+    // cursor.
+    val relationalLeg = () =>
       for ((sink, route) <- multiTableSink; endBlock <- s.endBlock) {
         // dimension legs FIRST (the reference inserts pool_keys rows as it
         // meets them, before the cursor advance, dao.ts:1869-1893): the
@@ -254,19 +259,21 @@ final class StreamDriver(
         }
         sink.write(route(canonical), batchId, endBlock)
       }
-    }
 
-    // the pending store is ALWAYS this batch's pending set — an empty one
-    // means the head is fully finalized, so the store empties too
-    val pendingLeg = Option.when(input.columns.contains("is_pending"))(() =>
-      pending match {
-        case Some(p) =>
-          withBlockBucket(p).withColumn("batch_id", lit(PendingBatchId))
-            .write.mode("overwrite").parquet(pendingDir)
-        case None => dropPending()
+    // the pending head is ALWAYS this batch's pending set — an empty one
+    // means the head is fully finalized, so the head empties too. Its rows
+    // (a few blocks) are collected from the cache into a local relation:
+    // driver heap, no block-manager storage to release. It replaces the
+    // previous head only once every leg has committed.
+    var head = pendingHead
+    val headLeg = Option.when(input.columns.contains("is_pending"))(() =>
+      head = pending.map { p =>
+        val h = withBlockBucket(p).withColumn("batch_id", lit(PendingBatchId))
+        spark.createDataFrame(h.collectAsList(), h.schema)
       })
 
-    CommitLegs.runAll(spark, Seq(factLeg, relationalLeg) ++ pendingLeg)
+    CommitLegs.runAll(spark, Seq(factLeg, relationalLeg) ++ headLeg)
+    pendingHead = head
 
     // canonical rows and the surviving pending head, as one filter over the
     // sized input (a union would double the refresh's partitions)
@@ -309,14 +316,14 @@ final class StreamDriver(
 
   /** Canonical facts plus the pending head (T4): what an operational query
     * should see — the reference serves unfinalized data too, it just never
-    * commits a cursor past it. Pending rows carry `batch_id = -2`. */
+    * commits a cursor past it. Pending rows carry `batch_id = -2`; they are
+    * this driver instance's head, so a fresh instance serves none until it
+    * processes a batch. */
   def operationalEvents: DataFrame = {
     val fs = new Path(factRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val canonical = readParquetIfPresent(s"$factRoot/raw_events", fs)
-    val pendingHead = readParquetIfPresent(pendingDir, fs)
-    (canonical, pendingHead) match {
+    (readParquetIfPresent(s"$factRoot/raw_events", fs), pendingHead) match {
       case (Some(c), Some(p)) =>
-        // align the pending store (data columns only) to the canonical read
+        // align the pending head (data columns only) to the canonical read
         // schema: partition-column read-back may narrow types, and unionByName
         // wants identical sets
         val aligned = c.schema.fields.map { f =>
@@ -342,11 +349,6 @@ final class StreamDriver(
           if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
              e.getMessage.contains("PATH_NOT_FOUND") => None
     }
-
-  private def dropPending(): Unit = {
-    val fs = new Path(pendingDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(pendingDir), true)
-  }
 
   /** Reorg retraction (T3): only partitions that can contain blocks ≥
     * fromBlock are touched — the boundary bucket is rewritten with its
@@ -381,16 +383,15 @@ final class StreamDriver(
 
     // a reorg invalidates the unfinalized head outright (T3 ∩ T4): the
     // post-reorg source re-emits it
-    dropPending()
+    pendingHead = None
 
     // the relational leg deletes instead of rewriting partitions (the
     // reference cascades deletes from event_keys, dao.ts:1543-1576)
-    jdbcSink.foreach(_.retract(fromBlock))
     multiTableSink.foreach(_._1.retract(fromBlock))
 
     // an invalidate can precede any canonical write (a reorg during
     // catch-up, or a pending-only head): with no fact storage yet, the
-    // pending drop and relational deletes above are the whole retraction
+    // head drop and relational deletes above are the whole retraction
     if (!fs.exists(new Path(path))) return
 
     val boundary = fromBlock / 4096
@@ -511,9 +512,12 @@ final class StreamDriver(
     }
   }
 
-  /** Pending-head store (T4): replaced wholesale each batch, never part of
-    * the canonical partition layout, never retracted or compacted. */
-  private val pendingDir = s"$factRoot/pending_events"
+  /** The pending head (T4): this batch's surviving pending rows as a local
+    * relation, replaced wholesale by each data batch that has the
+    * `is_pending` column, emptied by `start` and `retract`, never part of
+    * the canonical partition layout. Volatile: [[operationalEvents]] is read
+    * from other threads than the stream's. */
+  @volatile private var pendingHead: Option[DataFrame] = None
 
   /** Sentinel batch_id of pending rows in [[operationalEvents]] (canonical
     * batches are ≥ 0; the compacted archive is -1). */
@@ -712,7 +716,7 @@ object StreamDriver {
     * `dataRows` counts every non-control row (the mixed-batch check and
     * the legs' size). The block sets see only rows that pass the replay
     * guard: the cursor's end block is the highest accepted one, and the
-    * pending store's next content is [[pendingBlocks]]. */
+    * pending head's next content is [[pendingBlocks]]. */
   private final case class BatchSummary(controlRows: Long, dataRows: Long,
       invalidateFrom: Option[Long], acceptedBlocks: Set[Long], pendingBlocksSeen: Set[Long]) {
 

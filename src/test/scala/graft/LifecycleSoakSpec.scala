@@ -19,7 +19,7 @@ import graft.streaming.{JdbcMultiTableSink, RollupRefresher, StreamDriver}
   *
   *   TCP server speaking the reference message grammar
   *     → drainer → chunk directory → `graft-blocks` DSv2 connector
-  *     → StreamDriver (canonical parquet + pending store)
+  *     → StreamDriver (canonical parquet + in-memory pending head)
   *     → JdbcMultiTableSink (routed fact tables + cursor-as-commit)
   *     → RollupRefresher (4 hourly rollups) + operational-tier hook
   *
@@ -109,7 +109,8 @@ class LifecycleSoakSpec extends SparkSpec {
 
       // ---- phase 2: the reorg + new chain arrive; restarted driver -----
       BlockStreamDrainer.drain("127.0.0.1", srv.boundPort, dir, binary = true)
-      mkDriver().start(FeedBlockSource(dir, ctl), Trigger.AvailableNow())
+      val driver = mkDriver()
+      driver.start(FeedBlockSource(dir, ctl), Trigger.AvailableNow())
         .awaitTermination()
 
       // ---- canonical surface equals the batch truth --------------------
@@ -122,8 +123,7 @@ class LifecycleSoakSpec extends SparkSpec {
         .filter(col("count") > 1).isEmpty,
         "replay + reorg must leave no duplicate blocks")
 
-      // pending head is operational-only
-      val driver = mkDriver()
+      // pending head is operational-only, held by the driver that processed it
       val pending = driver.operationalEvents
         .filter(col("batch_id") === driver.PendingBatchId)
         .select("block_number").collect().map(_.getLong(0)).toSeq

@@ -294,7 +294,6 @@ class StreamingSpec extends SparkSpec {
     val driver = new StreamDriver(spark, s"$root/facts", s"$root/ckpt",
       analyticalEvery = 1L,
       onOperationalRefresh = df => refreshed = df.count(),
-      jdbcSink = Some(new graft.streaming.JdbcBatchSink(url, "once_events")),
       multiTableSink = Some((new graft.streaming.JdbcMultiTableSink(url, tables), route)))
 
     mem.addData((1L to 40L).map(b => (b, 0L, 0L, false)) :+ ((41L, 0L, 0L, true)))
@@ -303,15 +302,15 @@ class StreamingSpec extends SparkSpec {
     assert(opens.get == 2, s"${opens.get} partition opens for a 2-partition batch")
     assert(refreshed == 41L)
     assert(spark.read.parquet(s"$root/facts/raw_events").count() == 40L)
-    assert(spark.read.jdbc(url, "once_events", new java.util.Properties).count() == 40L)
+    assert(tables.map(t => spark.read.jdbc(url, t, new java.util.Properties).count()).sum == 40L)
     assert(driver.operationalEvents.count() == 41L)
   }
 
   /** Runs one micro-batch of `rows` canonical rows (blocks from 4090, 40
     * rows a block, so it spans two buckets) from a 4-partition source into
-    * the parquet facts and two Derby sinks; returns the parquet files per
-    * bucket and the task count of every stage the batch ran, in order: the
-    * summary first, then the fact write and the three JDBC appends (the
+    * the parquet facts and a two-table Derby sink; returns the parquet files
+    * per bucket and the task count of every stage the batch ran, in order:
+    * the summary first, then the fact write and the two JDBC appends (the
     * legs run at the same time, so their order varies). */
   private def sizedBatch(rows: Int): (Map[String, Int], Seq[Int]) = {
     import spark.implicits._
@@ -330,7 +329,6 @@ class StreamingSpec extends SparkSpec {
       tables(0) -> b.filter($"block_number" % 2 === 0),
       tables(1) -> b.filter($"block_number" % 2 === 1))
     val driver = new StreamDriver(spark, s"$root/facts", s"$root/ckpt",
-      jdbcSink = Some(new graft.streaming.JdbcBatchSink(url, "sized_events")),
       multiTableSink = Some((new graft.streaming.JdbcMultiTableSink(url, tables), route)))
 
     mem.addData((0 until rows).map(i => (4090L + i / 40, 0L, (i % 40).toLong)))
@@ -348,16 +346,16 @@ class StreamingSpec extends SparkSpec {
     val (files, stages) = sizedBatch(StreamDriver.RowsPerTask / 8)
     assert(files == Map("block_bucket=0" -> 1, "block_bucket=1" -> 1))
     assert(stages.headOption.contains(4), s"the summary reads all 4 source partitions: $stages")
-    assert(stages.tail == Seq(1, 1, 1, 1), s"tasks of the fact write and the JDBC appends: $stages")
+    assert(stages.tail == Seq(1, 1, 1), s"tasks of the fact write and the JDBC appends: $stages")
   }
 
   test("a batch above the rows-per-task size keeps more than one task per leg") {
     val (files, stages) = sizedBatch(2 * StreamDriver.RowsPerTask + 1)
     assert(files.values.sum > files.size, s"parquet files per bucket: $files")
-    assert(stages.tail == Seq(3, 3, 3, 3), s"tasks of the fact write and the JDBC appends: $stages")
+    assert(stages.tail == Seq(3, 3, 3), s"tasks of the fact write and the JDBC appends: $stages")
   }
 
-  test("a data batch runs one summary job plus one job per parquet leg") {
+  test("a data batch runs one summary job, one fact write and one head collect") {
     import spark.implicits._
     val root = SparkSpec.tempDir("graft-streaming").toString
     val driver = new StreamDriver(spark, s"$root/facts", s"$root/ckpt")
@@ -366,11 +364,71 @@ class StreamingSpec extends SparkSpec {
     def jobs(rows: Seq[(Long, Long, Long, Boolean)], batchId: Long) =
       StreamingSpec.recordJobs(spark)(driver.processBatch(batch(rows), batchId))
 
-    // fact write + pending write
+    // fact write + pending-head collect
     assert(jobs((1L to 40L).map(b => (b, 0L, 0L, false)) :+ ((41L, 0L, 0L, true)), 0L) == 3)
-    // fact write only: a finalized head drops the pending store, no job
+    // fact write only: a finalized head empties the pending head, no job
     assert(jobs((41L to 80L).map(b => (b, 0L, 0L, false)), 1L) == 2)
     assert(driver.operationalEvents.count() == 80L)
+  }
+
+  test("a live run writes no pending_events directory") {
+    import spark.implicits._
+    val root = SparkSpec.tempDir("graft-streaming").toString
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long, Boolean)]
+    val source = new graft.sources.BlockSource {
+      override def schema = StructType(StreamingSpec.this.schema.fields :+
+        StructField("is_pending", BooleanType))
+      override def stream(s: org.apache.spark.sql.SparkSession) =
+        mem.toDF().toDF("block_number", "transaction_index", "event_index", "is_pending")
+    }
+    val driver = new StreamDriver(spark, s"$root/facts", s"$root/ckpt")
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val q = driver.start(source, Trigger.ProcessingTime("50 milliseconds"))
+    try (0L until 5L).foreach { i =>
+      // ten finalized blocks and the next one pending, one micro-batch each
+      mem.addData((10 * i + 1 to 10 * i + 10).map(b => (b, 0L, 0L, false)) :+
+        ((10 * i + 11, 0L, 0L, true)))
+      q.processAllAvailable()
+      assert(driver.operationalEvents.filter($"batch_id" === driver.PendingBatchId)
+        .select($"block_number").collect().map(_.getLong(0)).toSeq == Seq(10 * i + 11))
+    } finally q.stop()
+    assert(driver.operationalEvents.count() == 51L)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$root/facts/pending_events")))
+    // what the run persisted, it released: the head holds no block-manager storage
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore)
+  }
+
+  test("a batch whose relational leg fails keeps the previous pending head") {
+    import spark.implicits._
+    val root = SparkSpec.tempDir("graft-streaming").toString
+    val url = s"jdbc:derby:$root/db;create=true"
+    val boom = new IllegalStateException("relational leg down")
+    @volatile var fail = false
+    val route = (b: org.apache.spark.sql.DataFrame) => {
+      if (fail) throw boom
+      Map("head_events" -> b)
+    }
+    val driver = new StreamDriver(spark, s"$root/facts", s"$root/ckpt",
+      multiTableSink = Some((new graft.streaming.JdbcMultiTableSink(url, Seq("head_events")), route)))
+    // blocks `from` until `to` finalized, block `to` pending
+    def batch(from: Long, to: Long) = ((from until to).map(b => (b, 0L, 0L, false)) :+ ((to, 0L, 0L, true)))
+      .toDF("block_number", "transaction_index", "event_index", "is_pending")
+    def pendingBlocks() = driver.operationalEvents.filter($"batch_id" === driver.PendingBatchId)
+      .select($"block_number").collect().map(_.getLong(0)).toSeq
+
+    driver.processBatch(batch(1L, 11L), 0L)
+    assert(pendingBlocks() == Seq(11L))
+
+    fail = true
+    val e = intercept[IllegalStateException](driver.processBatch(batch(11L, 21L), 1L))
+    assert(e eq boom)
+    assert(pendingBlocks() == Seq(11L), "a failed batch must leave the previous head in place")
+
+    // the replay with a healthy sink moves the head on
+    fail = false
+    driver.processBatch(batch(11L, 21L), 1L)
+    assert(pendingBlocks() == Seq(21L))
   }
 
   test("a failing relational leg fails the batch, leaks no cache, and its replay converges") {
@@ -379,7 +437,7 @@ class StreamingSpec extends SparkSpec {
     val boom = new IllegalStateException("relational leg down")
 
     // one driver over a Derby multi-table sink; `fail` makes the relational
-    // leg throw while the fact and pending legs still run beside it
+    // leg throw while the fact leg and the head collect still run beside it
     def run(root: String, fail: Boolean) = {
       val rawDir = s"$root/raw"
       Files.createDirectories(java.nio.file.Paths.get(rawDir))
@@ -444,11 +502,12 @@ class StreamingSpec extends SparkSpec {
     val rawDir = s"$root/raw"
     Files.createDirectories(java.nio.file.Paths.get(rawDir))
 
-    // Spark's bundled embedded Derby stands in for the reference's Postgres
+    // Spark's bundled embedded Derby stands in for the reference's Postgres;
+    // a one-table sink receives the whole canonical batch
     val url = s"jdbc:derby:$root/db;create=true"
-    val sink = new graft.streaming.JdbcBatchSink(url, "raw_events")
+    val sink = new graft.streaming.JdbcMultiTableSink(url, Seq("raw_events"))
     val driver = new StreamDriver(spark, s"$root/facts", s"$root/ckpt",
-      jdbcSink = Some(sink))
+      multiTableSink = Some((sink, (b: org.apache.spark.sql.DataFrame) => Map("raw_events" -> b))))
 
     (1L to 9000L).map(b => (b, 0L, 0L)).toDF("block_number", "transaction_index", "event_index")
       .write.mode("overwrite").parquet(s"$rawDir/chunk=1")
