@@ -46,6 +46,223 @@ object Fixtures {
   /** 2^128 as a double literal (parses to exactly 2^128 in both engines). */
   val TwoPow128 = "3.402823669209385e38"
 
+  /** A fixture table that is a filter of `ek`: the rows where `where` holds,
+    * with the event's `id` as `event_id` followed by `columns`, pairs of
+    * (column, SQL expression over `ek`'s columns). Declared once, it gives
+    * the view's SQL in [[defs]], and so the DuckDB prelude, and the predicate
+    * and expressions from which `CoreViews` projects the operational tier
+    * out of one scan of `ek`. */
+  final case class EkTable(name: String, where: String, columns: (String, String)*) {
+    /** Every column of the table with its expression, `event_id` first. */
+    def select: Seq[(String, String)] = ("event_id" -> "id") +: columns
+
+    /** The SQL expression of column `c`. */
+    def expr(c: String): String = select.collectFirst { case (`c`, e) => e }
+      .getOrElse(throw new NoSuchElementException(s"$name has no column $c"))
+
+    def sql: String = select.map { case (c, e) => s"$e AS $c" }
+      .mkString("\n      SELECT ", ",\n             ", s"\n      FROM ek WHERE $where")
+  }
+
+  /** The fact tables that are filters of `ek` (FIXTURES.md §2 lists which
+    * buckets feed which table). */
+  val ekTables: Seq[EkTable] = Seq(
+    // swaps (dao.ts:233-248). sqrt_ratio mirrored as DOUBLE for analytics
+    // (u256 exactness is exercised by the decode layer, not the fixtures).
+    EkTable("swaps", "bucket < 40",
+      "locker" -> "'0xl' || CAST(user_id % 40 AS STRING)",
+      "pool_key_hash" -> "'0xp' || CAST(pool_id AS STRING)",
+      "delta0" -> "CAST(sgn * cents * 100 AS DECIMAL(18,0))",
+      "delta1" -> "CAST(-sgn * cents * 99 AS DECIMAL(18,0))",
+      "sqrt_ratio_after" -> s"$TwoPow128 * (1.0 + CAST((cents % 200) * 10 - 1000 AS DOUBLE) * 5e-7)",
+      "tick_after" -> "CAST((cents % 200) * 10 - 1000 AS BIGINT)",
+      "liquidity_after" -> "CAST(1000000 + cents * 10 AS DECIMAL(18,0))"),
+
+    // position_updates (dao.ts:145-163)
+    EkTable("position_updates", "bucket BETWEEN 40 AND 59",
+      "locker" -> "'0xl' || CAST(user_id % 40 AS STRING)",
+      "pool_key_hash" -> "'0xp' || CAST(pool_id AS STRING)",
+      "salt" -> "'0x' || CAST(user_id % 20 AS STRING)",
+      "lower_bound" -> "CAST((user_id % 10) * 100 - 500 AS BIGINT)",
+      "upper_bound" -> "CAST((user_id % 10) * 100 - 400 + (seq % 3) * 100 AS BIGINT)",
+      "liquidity_delta" -> "CAST(sgn * cents AS DECIMAL(18,0))",
+      "delta0" -> "CAST(sgn * cents * 100 AS DECIMAL(18,0))",
+      "delta1" -> "CAST(sgn * cents * 99 AS DECIMAL(18,0))"),
+
+    // pool_initializations (dao.ts:221-230)
+    EkTable("pool_initializations", "bucket BETWEEN 60 AND 61",
+      "pool_key_hash" -> "'0xp' || CAST(pool_id AS STRING)",
+      "tick" -> "CAST((cents % 150) * 10 - 750 AS BIGINT)",
+      "sqrt_ratio" -> s"$TwoPow128 * (1.0 + CAST((cents % 150) * 10 - 750 AS DOUBLE) * 5e-7)"),
+
+    // fees_accumulated (dao.ts:210-219); zero amounts exercise the
+    // `amount0 > 0` aggregation guards (dao.ts:1575).
+    EkTable("fees_accumulated", "bucket BETWEEN 62 AND 66",
+      "pool_key_hash" -> "'0xp' || CAST(pool_id AS STRING)",
+      "amount0" -> "CAST(CASE WHEN user_id % 5 = 0 THEN 0 ELSE cents * 3 END AS DECIMAL(18,0))",
+      "amount1" -> "CAST(CASE WHEN user_id % 5 = 1 THEN 0 ELSE cents * 2 END AS DECIMAL(18,0))"),
+
+    // position_fees_collected (dao.ts:165-180); withdrawals => deltas <= 0.
+    EkTable("position_fees_collected", "bucket BETWEEN 67 AND 69",
+      "pool_key_hash" -> "'0xp' || CAST(pool_id AS STRING)",
+      "owner" -> "'0xo' || CAST(user_id % 25 AS STRING)",
+      "salt" -> "'0x' || CAST(user_id % 20 AS STRING)",
+      "lower_bound" -> "CAST((user_id % 10) * 100 - 500 AS BIGINT)",
+      "upper_bound" -> "CAST((user_id % 10) * 100 - 400 + (seq % 3) * 100 AS BIGINT)",
+      "delta0" -> "CAST(-(cents * 2) AS DECIMAL(18,0))",
+      "delta1" -> "CAST(-cents AS DECIMAL(18,0))"),
+
+    // protocol_fees_paid (dao.ts:193-208); zeros exercise `delta != 0` guards.
+    EkTable("protocol_fees_paid", "bucket BETWEEN 70 AND 71",
+      "pool_key_hash" -> "'0xp' || CAST(pool_id AS STRING)",
+      "owner" -> "'0xo' || CAST(user_id % 25 AS STRING)",
+      "salt" -> "'0x' || CAST(user_id % 20 AS STRING)",
+      "lower_bound" -> "CAST((user_id % 10) * 100 - 500 AS BIGINT)",
+      "upper_bound" -> "CAST((user_id % 10) * 100 - 400 + (seq % 3) * 100 AS BIGINT)",
+      "delta0" -> "CAST(CASE WHEN user_id % 4 = 0 THEN 0 ELSE -(cents * 2) END AS DECIMAL(18,0))",
+      "delta1" -> "CAST(CASE WHEN user_id % 4 = 1 THEN 0 ELSE -cents END AS DECIMAL(18,0))"),
+
+    // protocol_fees_withdrawn (dao.ts:183-190)
+    EkTable("protocol_fees_withdrawn", "bucket = 72",
+      "recipient" -> "'0xa' || CAST(user_id AS STRING)",
+      "token" -> "'0xt' || CAST(user_id % 10 AS STRING)",
+      "amount" -> "CAST(cents AS DECIMAL(18,0))"),
+
+    // position_transfers (dao.ts:134-143); '0x0' senders are mints.
+    EkTable("position_transfers", "bucket BETWEEN 73 AND 74",
+      "token_id" -> "CAST(user_id * 31 % 500 AS BIGINT)",
+      "from_address" -> "CASE WHEN seq % 4 = 0 THEN '0x0' ELSE '0xa' || CAST(user_id AS STRING) END",
+      "to_address" -> "'0xa' || CAST((user_id + 7) % 150 AS STRING)"),
+
+    // position_minted_with_referrer (dao.ts:250-257)
+    EkTable("position_minted_with_referrer", "bucket = 75",
+      "token_id" -> "CAST(user_id * 31 % 500 AS BIGINT)",
+      "referrer" -> "'0xr' || CAST(user_id % 5 AS STRING)"),
+
+    // twamm_order_updates (dao.ts:650-667); times BIGINT epoch, window-aligned
+    // so orders overlap execution times (dao.ts:786-794 semantics).
+    EkTable("twamm_order_updates", "bucket BETWEEN 76 AND 78",
+      "key_hash" -> "'0xp' || CAST(pool_id AS STRING)",
+      "owner" -> "'0xo' || CAST(user_id % 25 AS STRING)",
+      "salt" -> "'0x' || CAST(user_id % 20 AS STRING)",
+      "sale_rate_delta0" -> "CAST(sgn * cents * 10 AS DECIMAL(18,0))",
+      "sale_rate_delta1" -> "CAST(sgn * cents * 7 AS DECIMAL(18,0))",
+      "start_time" -> "btime - (btime % 1024)",
+      "end_time" -> "btime - (btime % 1024) + 1024 * (1 + user_id % 8)"),
+
+    // twamm_proceeds_withdrawals (dao.ts:669-686)
+    EkTable("twamm_proceeds_withdrawals", "bucket = 79",
+      "key_hash" -> "'0xp' || CAST(pool_id AS STRING)",
+      "owner" -> "'0xo' || CAST(user_id % 25 AS STRING)",
+      "salt" -> "'0x' || CAST(user_id % 20 AS STRING)",
+      "amount0" -> "CAST(cents * 3 AS DECIMAL(18,0))",
+      "amount1" -> "CAST(cents * 2 AS DECIMAL(18,0))",
+      "start_time" -> "btime - (btime % 1024)",
+      "end_time" -> "btime - (btime % 1024) + 1024 * (1 + user_id % 8)"),
+
+    // twamm_virtual_order_executions (dao.ts:688-699)
+    EkTable("twamm_virtual_order_executions", "bucket BETWEEN 80 AND 82",
+      "key_hash" -> "'0xp' || CAST(pool_id AS STRING)",
+      "token0_sale_rate" -> "CAST(cents * 10 AS DECIMAL(18,0))",
+      "token1_sale_rate" -> "CAST(cents * 7 AS DECIMAL(18,0))",
+      "delta0" -> "CAST(sgn * cents AS DECIMAL(18,0))",
+      "delta1" -> "CAST(-sgn * cents AS DECIMAL(18,0))"),
+
+    // staker_staked / staker_withdrawn (dao.ts:283-304)
+    EkTable("staker_staked", "bucket BETWEEN 83 AND 85",
+      "from_address" -> "'0xs' || CAST(user_id % 30 AS STRING)",
+      "amount" -> "CAST(cents * 100 AS DECIMAL(18,0))",
+      "delegate" -> "'0xd' || CAST(user_id % 7 AS STRING)"),
+
+    EkTable("staker_withdrawn", "bucket = 86",
+      "from_address" -> "'0xs' || CAST(user_id % 30 AS STRING)",
+      "amount" -> "CAST(cents * 50 AS DECIMAL(18,0))",
+      "recipient" -> "'0xa' || CAST(user_id AS STRING)",
+      "delegate" -> "'0xd' || CAST(user_id % 7 AS STRING)"),
+
+    // governor_voted (dao.ts:342-355)
+    EkTable("governor_voted", "bucket BETWEEN 89 AND 91",
+      "id" -> "'0xprop' || CAST(user_id % 15 AS STRING)",
+      "voter" -> "'0xv' || CAST(seq % 50 AS STRING)",
+      "weight" -> "CAST(cents AS DECIMAL(18,0))",
+      "yea" -> "(seq % 3) < 2"),
+
+    // governor_canceled / governor_executed (dao.ts:342-382)
+    EkTable("governor_canceled", "bucket = 92 AND user_id % 2 = 0",
+      "id" -> "'0xprop' || CAST(user_id % 15 AS STRING)"),
+
+    EkTable("governor_executed", "bucket = 92 AND user_id % 2 = 1",
+      "id" -> "'0xprop' || CAST(user_id % 15 AS STRING)"),
+
+    EkTable("governor_proposal_described", "bucket = 93",
+      "id" -> "'0xprop' || CAST(user_id % 15 AS STRING)",
+      "description" -> "'proposal ' || CAST(user_id % 15 AS STRING) || ' description'"),
+
+    // token_registrations v1 (dao.ts:259-268): name/symbol felt-packed short
+    // strings ("TokenD"/"TKD", D = last digit; 92837519912496 = pack("Token0"),
+    // 5524272 = pack("TK0")). user_id%10=9 yields 1-char symbol "T" (invalid,
+    // filtered by the registration validation view, dao.ts:989-999).
+    EkTable("token_registrations", "bucket = 94",
+      "address" -> "'0xt' || CAST(user_id % 10 AS STRING)",
+      "name" -> "CAST(92837519912496 + user_id % 10 AS DECIMAL(38,0))",
+      "symbol" -> "CAST(CASE WHEN user_id % 10 = 9 THEN 84 ELSE 5524272 + user_id % 10 END AS DECIMAL(38,0))",
+      "decimals" -> "CAST(6 + (user_id % 3) * 6 AS BIGINT)",
+      "total_supply" -> "CAST(cents * 1000 AS DECIMAL(18,0))"),
+
+    // token_registrations_v3 (dao.ts:270-281): VARCHAR name/symbol.
+    EkTable("token_registrations_v3", "bucket = 95",
+      "address" -> "'0xt' || CAST(user_id % 10 AS STRING)",
+      "name" -> "'Token' || CAST(user_id % 10 AS STRING)",
+      "symbol" -> "CASE WHEN user_id % 10 = 9 THEN 'T' ELSE 'TK' || CAST(user_id % 10 AS STRING) END",
+      "decimals" -> "CAST(6 + (user_id % 3) * 6 AS BIGINT)",
+      "total_supply" -> "CAST(cents * 1000 AS DECIMAL(18,0))"),
+
+    // limit_order_placed / limit_order_closed (dao.ts:715-747)
+    EkTable("limit_order_placed", "bucket BETWEEN 96 AND 97",
+      "key_hash" -> "'0xp' || CAST(pool_id AS STRING)",
+      "owner" -> "'0xo' || CAST(user_id % 25 AS STRING)",
+      "salt" -> "'0x' || CAST(user_id % 20 AS STRING)",
+      "token0" -> "'0xt' || CAST(pool_id % 5 AS STRING)",
+      "token1" -> "'0xt' || CAST(5 + pool_id % 5 AS STRING)",
+      "tick" -> "CAST((cents % 100) * 10 - 500 AS BIGINT)",
+      "liquidity" -> "CAST(cents * 5 AS DECIMAL(18,0))",
+      "amount" -> "CAST(cents * 4 AS DECIMAL(18,0))"),
+
+    EkTable("limit_order_closed", "bucket = 98",
+      "key_hash" -> "'0xp' || CAST(pool_id AS STRING)",
+      "owner" -> "'0xo' || CAST(user_id % 25 AS STRING)",
+      "salt" -> "'0x' || CAST(user_id % 20 AS STRING)",
+      "token0" -> "'0xt' || CAST(pool_id % 5 AS STRING)",
+      "token1" -> "'0xt' || CAST(5 + pool_id % 5 AS STRING)",
+      "tick" -> "CAST((cents % 100) * 10 - 500 AS BIGINT)",
+      "amount0" -> "CAST(cents AS DECIMAL(18,0))",
+      "amount1" -> "CAST(cents * 2 AS DECIMAL(18,0))"),
+
+    // oracle_snapshots (dao.ts:701-713)
+    EkTable("oracle_snapshots", "bucket = 99 AND user_id % 2 = 0",
+      "key_hash" -> "'0xp' || CAST(pool_id AS STRING)",
+      "token0" -> "'0xt' || CAST(pool_id % 5 AS STRING)",
+      "token1" -> "'0xt' || CAST(5 + pool_id % 5 AS STRING)",
+      "index" -> "CAST(seq % 64 AS BIGINT)",
+      "snapshot_block_timestamp" -> "btime",
+      "snapshot_tick_cumulative" -> "CAST(cents * btime % 1000000007 AS DECIMAL(18,0))"),
+
+    // liquidity_updated — spline pools (dao.ts:749-763). Zero-liquidity-factor
+    // events are dropped at ingest (eventProcessors.ts:88-93), mirrored here.
+    EkTable("liquidity_updated", "bucket = 99 AND user_id % 2 = 1 AND user_id % 6 != 0",
+      "pool_key_hash" -> "'0xp' || CAST(pool_id AS STRING)",
+      "sender" -> "'0xa' || CAST(user_id AS STRING)",
+      "liquidity_factor" -> "CAST(cents AS DECIMAL(18,0))",
+      "shares" -> "CAST(cents * 2 AS DECIMAL(18,0))",
+      "amount0" -> "CAST(cents * 3 AS DECIMAL(18,0))",
+      "amount1" -> "CAST(cents * 4 AS DECIMAL(18,0))",
+      "protocol_fees0" -> "CAST(CAST(FLOOR(CAST(cents AS DOUBLE) / 100) AS BIGINT) AS DECIMAL(18,0))",
+      "protocol_fees1" -> "CAST(CAST(FLOOR(CAST(cents AS DOUBLE) / 100) AS BIGINT) AS DECIMAL(18,0))"))
+
+  /** The declaration of the `ek` filter `name`. */
+  def ekTable(name: String): EkTable = ekTables.find(_.name == name)
+    .getOrElse(throw new NoSuchElementException(s"no ek table $name"))
+
   /** Fixture view definitions, topologically ordered.
     * Dialect-common SQL: runs unchanged in Spark SQL and DuckDB. */
   val defs: Seq[(String, String)] = Seq(
@@ -103,149 +320,8 @@ object Fixtures {
                   WHEN 2 THEN '$fee30bps' ELSE '$fee50bps' END AS DECIMAL(38,0)) AS fee,
              CAST(10 * (1 + pool_id % 3) AS BIGINT) AS tick_spacing,
              CASE WHEN pool_id % 4 = 3 THEN '0xext' ELSE '0x0' END AS extension
-      FROM raw""",
-
-    // swaps (dao.ts:233-248). sqrt_ratio mirrored as DOUBLE for analytics
-    // (u256 exactness is exercised by the decode layer, not the fixtures).
-    "swaps" -> s"""
-      SELECT id AS event_id,
-             '0xl' || CAST(user_id % 40 AS STRING) AS locker,
-             '0xp' || CAST(pool_id AS STRING) AS pool_key_hash,
-             CAST(sgn * cents * 100 AS DECIMAL(18,0)) AS delta0,
-             CAST(-sgn * cents * 99 AS DECIMAL(18,0)) AS delta1,
-             $TwoPow128 * (1.0 + CAST((cents % 200) * 10 - 1000 AS DOUBLE) * 5e-7) AS sqrt_ratio_after,
-             CAST((cents % 200) * 10 - 1000 AS BIGINT) AS tick_after,
-             CAST(1000000 + cents * 10 AS DECIMAL(18,0)) AS liquidity_after
-      FROM ek WHERE bucket < 40""",
-
-    // position_updates (dao.ts:145-163)
-    "position_updates" -> s"""
-      SELECT id AS event_id,
-             '0xl' || CAST(user_id % 40 AS STRING) AS locker,
-             '0xp' || CAST(pool_id AS STRING) AS pool_key_hash,
-             '0x' || CAST(user_id % 20 AS STRING) AS salt,
-             CAST((user_id % 10) * 100 - 500 AS BIGINT) AS lower_bound,
-             CAST((user_id % 10) * 100 - 400 + (seq % 3) * 100 AS BIGINT) AS upper_bound,
-             CAST(sgn * cents AS DECIMAL(18,0)) AS liquidity_delta,
-             CAST(sgn * cents * 100 AS DECIMAL(18,0)) AS delta0,
-             CAST(sgn * cents * 99 AS DECIMAL(18,0)) AS delta1
-      FROM ek WHERE bucket BETWEEN 40 AND 59""",
-
-    // pool_initializations (dao.ts:221-230)
-    "pool_initializations" -> s"""
-      SELECT id AS event_id,
-             '0xp' || CAST(pool_id AS STRING) AS pool_key_hash,
-             CAST((cents % 150) * 10 - 750 AS BIGINT) AS tick,
-             $TwoPow128 * (1.0 + CAST((cents % 150) * 10 - 750 AS DOUBLE) * 5e-7) AS sqrt_ratio
-      FROM ek WHERE bucket BETWEEN 60 AND 61""",
-
-    // fees_accumulated (dao.ts:210-219); zero amounts exercise the
-    // `amount0 > 0` aggregation guards (dao.ts:1575).
-    "fees_accumulated" -> s"""
-      SELECT id AS event_id,
-             '0xp' || CAST(pool_id AS STRING) AS pool_key_hash,
-             CAST(CASE WHEN user_id % 5 = 0 THEN 0 ELSE cents * 3 END AS DECIMAL(18,0)) AS amount0,
-             CAST(CASE WHEN user_id % 5 = 1 THEN 0 ELSE cents * 2 END AS DECIMAL(18,0)) AS amount1
-      FROM ek WHERE bucket BETWEEN 62 AND 66""",
-
-    // position_fees_collected (dao.ts:165-180); withdrawals => deltas <= 0.
-    "position_fees_collected" -> s"""
-      SELECT id AS event_id,
-             '0xp' || CAST(pool_id AS STRING) AS pool_key_hash,
-             '0xo' || CAST(user_id % 25 AS STRING) AS owner,
-             '0x' || CAST(user_id % 20 AS STRING) AS salt,
-             CAST((user_id % 10) * 100 - 500 AS BIGINT) AS lower_bound,
-             CAST((user_id % 10) * 100 - 400 + (seq % 3) * 100 AS BIGINT) AS upper_bound,
-             CAST(-(cents * 2) AS DECIMAL(18,0)) AS delta0,
-             CAST(-cents AS DECIMAL(18,0)) AS delta1
-      FROM ek WHERE bucket BETWEEN 67 AND 69""",
-
-    // protocol_fees_paid (dao.ts:193-208); zeros exercise `delta != 0` guards.
-    "protocol_fees_paid" -> s"""
-      SELECT id AS event_id,
-             '0xp' || CAST(pool_id AS STRING) AS pool_key_hash,
-             '0xo' || CAST(user_id % 25 AS STRING) AS owner,
-             '0x' || CAST(user_id % 20 AS STRING) AS salt,
-             CAST((user_id % 10) * 100 - 500 AS BIGINT) AS lower_bound,
-             CAST((user_id % 10) * 100 - 400 + (seq % 3) * 100 AS BIGINT) AS upper_bound,
-             CAST(CASE WHEN user_id % 4 = 0 THEN 0 ELSE -(cents * 2) END AS DECIMAL(18,0)) AS delta0,
-             CAST(CASE WHEN user_id % 4 = 1 THEN 0 ELSE -cents END AS DECIMAL(18,0)) AS delta1
-      FROM ek WHERE bucket BETWEEN 70 AND 71""",
-
-    // protocol_fees_withdrawn (dao.ts:183-190)
-    "protocol_fees_withdrawn" -> s"""
-      SELECT id AS event_id,
-             '0xa' || CAST(user_id AS STRING) AS recipient,
-             '0xt' || CAST(user_id % 10 AS STRING) AS token,
-             CAST(cents AS DECIMAL(18,0)) AS amount
-      FROM ek WHERE bucket = 72""",
-
-    // position_transfers (dao.ts:134-143); '0x0' senders are mints.
-    "position_transfers" -> s"""
-      SELECT id AS event_id,
-             CAST(user_id * 31 % 500 AS BIGINT) AS token_id,
-             CASE WHEN seq % 4 = 0 THEN '0x0' ELSE '0xa' || CAST(user_id AS STRING) END AS from_address,
-             '0xa' || CAST((user_id + 7) % 150 AS STRING) AS to_address
-      FROM ek WHERE bucket BETWEEN 73 AND 74""",
-
-    // position_minted_with_referrer (dao.ts:250-257)
-    "position_minted_with_referrer" -> s"""
-      SELECT id AS event_id,
-             CAST(user_id * 31 % 500 AS BIGINT) AS token_id,
-             '0xr' || CAST(user_id % 5 AS STRING) AS referrer
-      FROM ek WHERE bucket = 75""",
-
-    // twamm_order_updates (dao.ts:650-667); times BIGINT epoch, window-aligned
-    // so orders overlap execution times (dao.ts:786-794 semantics).
-    "twamm_order_updates" -> s"""
-      SELECT id AS event_id,
-             '0xp' || CAST(pool_id AS STRING) AS key_hash,
-             '0xo' || CAST(user_id % 25 AS STRING) AS owner,
-             '0x' || CAST(user_id % 20 AS STRING) AS salt,
-             CAST(sgn * cents * 10 AS DECIMAL(18,0)) AS sale_rate_delta0,
-             CAST(sgn * cents * 7 AS DECIMAL(18,0)) AS sale_rate_delta1,
-             btime - (btime % 1024) AS start_time,
-             btime - (btime % 1024) + 1024 * (1 + user_id % 8) AS end_time
-      FROM ek WHERE bucket BETWEEN 76 AND 78""",
-
-    // twamm_proceeds_withdrawals (dao.ts:669-686)
-    "twamm_proceeds_withdrawals" -> s"""
-      SELECT id AS event_id,
-             '0xp' || CAST(pool_id AS STRING) AS key_hash,
-             '0xo' || CAST(user_id % 25 AS STRING) AS owner,
-             '0x' || CAST(user_id % 20 AS STRING) AS salt,
-             CAST(cents * 3 AS DECIMAL(18,0)) AS amount0,
-             CAST(cents * 2 AS DECIMAL(18,0)) AS amount1,
-             btime - (btime % 1024) AS start_time,
-             btime - (btime % 1024) + 1024 * (1 + user_id % 8) AS end_time
-      FROM ek WHERE bucket = 79""",
-
-    // twamm_virtual_order_executions (dao.ts:688-699)
-    "twamm_virtual_order_executions" -> s"""
-      SELECT id AS event_id,
-             '0xp' || CAST(pool_id AS STRING) AS key_hash,
-             CAST(cents * 10 AS DECIMAL(18,0)) AS token0_sale_rate,
-             CAST(cents * 7 AS DECIMAL(18,0)) AS token1_sale_rate,
-             CAST(sgn * cents AS DECIMAL(18,0)) AS delta0,
-             CAST(-sgn * cents AS DECIMAL(18,0)) AS delta1
-      FROM ek WHERE bucket BETWEEN 80 AND 82""",
-
-    // staker_staked / staker_withdrawn (dao.ts:283-304)
-    "staker_staked" -> s"""
-      SELECT id AS event_id,
-             '0xs' || CAST(user_id % 30 AS STRING) AS from_address,
-             CAST(cents * 100 AS DECIMAL(18,0)) AS amount,
-             '0xd' || CAST(user_id % 7 AS STRING) AS delegate
-      FROM ek WHERE bucket BETWEEN 83 AND 85""",
-
-    "staker_withdrawn" -> s"""
-      SELECT id AS event_id,
-             '0xs' || CAST(user_id % 30 AS STRING) AS from_address,
-             CAST(cents * 50 AS DECIMAL(18,0)) AS amount,
-             '0xa' || CAST(user_id AS STRING) AS recipient,
-             '0xd' || CAST(user_id % 7 AS STRING) AS delegate
-      FROM ek WHERE bucket = 86""",
-
+      FROM raw""") ++
+    ekTables.map(t => t.name -> t.sql) ++ Seq(
     // governor_reconfigured (dao.ts:306-320); 3 config versions.
     "governor_reconfigured" -> s"""
       SELECT MIN(id) AS event_id,
@@ -268,24 +344,6 @@ object Fixtures {
              (user_id % 15) % 3 AS config_version
       FROM ek WHERE bucket = 88 GROUP BY user_id % 15""",
 
-    // governor_voted (dao.ts:342-355)
-    "governor_voted" -> s"""
-      SELECT id AS event_id,
-             '0xprop' || CAST(user_id % 15 AS STRING) AS id,
-             '0xv' || CAST(seq % 50 AS STRING) AS voter,
-             CAST(cents AS DECIMAL(18,0)) AS weight,
-             (seq % 3) < 2 AS yea
-      FROM ek WHERE bucket BETWEEN 89 AND 91""",
-
-    // governor_canceled / governor_executed (dao.ts:342-382)
-    "governor_canceled" -> s"""
-      SELECT id AS event_id, '0xprop' || CAST(user_id % 15 AS STRING) AS id
-      FROM ek WHERE bucket = 92 AND user_id % 2 = 0""",
-
-    "governor_executed" -> s"""
-      SELECT id AS event_id, '0xprop' || CAST(user_id % 15 AS STRING) AS id
-      FROM ek WHERE bucket = 92 AND user_id % 2 = 1""",
-
     // governor_proposed_calls (dao.ts:331-340): flattened child rows, one
     // calldata word per row (the NUMERIC[] column rebuilt/exploded by the
     // S9 query); every bucket-88 event beyond the proposal's first becomes
@@ -306,85 +364,6 @@ object Fixtures {
              ROW_NUMBER() OVER (PARTITION BY user_id % 15 ORDER BY id) - 1 AS index,
              CAST(cents * 5 AS DECIMAL(18,0)) AS result_word
       FROM ek WHERE bucket = 92 AND user_id % 2 = 1""",
-
-    "governor_proposal_described" -> s"""
-      SELECT id AS event_id,
-             '0xprop' || CAST(user_id % 15 AS STRING) AS id,
-             'proposal ' || CAST(user_id % 15 AS STRING) || ' description' AS description
-      FROM ek WHERE bucket = 93""",
-
-    // token_registrations v1 (dao.ts:259-268): name/symbol felt-packed short
-    // strings ("TokenD"/"TKD", D = last digit; 92837519912496 = pack("Token0"),
-    // 5524272 = pack("TK0")). user_id%10=9 yields 1-char symbol "T" (invalid,
-    // filtered by the registration validation view, dao.ts:989-999).
-    "token_registrations" -> s"""
-      SELECT id AS event_id,
-             '0xt' || CAST(user_id % 10 AS STRING) AS address,
-             CAST(92837519912496 + user_id % 10 AS DECIMAL(38,0)) AS name,
-             CAST(CASE WHEN user_id % 10 = 9 THEN 84 ELSE 5524272 + user_id % 10 END AS DECIMAL(38,0)) AS symbol,
-             CAST(6 + (user_id % 3) * 6 AS BIGINT) AS decimals,
-             CAST(cents * 1000 AS DECIMAL(18,0)) AS total_supply
-      FROM ek WHERE bucket = 94""",
-
-    // token_registrations_v3 (dao.ts:270-281): VARCHAR name/symbol.
-    "token_registrations_v3" -> s"""
-      SELECT id AS event_id,
-             '0xt' || CAST(user_id % 10 AS STRING) AS address,
-             'Token' || CAST(user_id % 10 AS STRING) AS name,
-             CASE WHEN user_id % 10 = 9 THEN 'T' ELSE 'TK' || CAST(user_id % 10 AS STRING) END AS symbol,
-             CAST(6 + (user_id % 3) * 6 AS BIGINT) AS decimals,
-             CAST(cents * 1000 AS DECIMAL(18,0)) AS total_supply
-      FROM ek WHERE bucket = 95""",
-
-    // limit_order_placed / limit_order_closed (dao.ts:715-747)
-    "limit_order_placed" -> s"""
-      SELECT id AS event_id,
-             '0xp' || CAST(pool_id AS STRING) AS key_hash,
-             '0xo' || CAST(user_id % 25 AS STRING) AS owner,
-             '0x' || CAST(user_id % 20 AS STRING) AS salt,
-             '0xt' || CAST(pool_id % 5 AS STRING) AS token0,
-             '0xt' || CAST(5 + pool_id % 5 AS STRING) AS token1,
-             CAST((cents % 100) * 10 - 500 AS BIGINT) AS tick,
-             CAST(cents * 5 AS DECIMAL(18,0)) AS liquidity,
-             CAST(cents * 4 AS DECIMAL(18,0)) AS amount
-      FROM ek WHERE bucket BETWEEN 96 AND 97""",
-
-    "limit_order_closed" -> s"""
-      SELECT id AS event_id,
-             '0xp' || CAST(pool_id AS STRING) AS key_hash,
-             '0xo' || CAST(user_id % 25 AS STRING) AS owner,
-             '0x' || CAST(user_id % 20 AS STRING) AS salt,
-             '0xt' || CAST(pool_id % 5 AS STRING) AS token0,
-             '0xt' || CAST(5 + pool_id % 5 AS STRING) AS token1,
-             CAST((cents % 100) * 10 - 500 AS BIGINT) AS tick,
-             CAST(cents AS DECIMAL(18,0)) AS amount0,
-             CAST(cents * 2 AS DECIMAL(18,0)) AS amount1
-      FROM ek WHERE bucket = 98""",
-
-    // oracle_snapshots (dao.ts:701-713)
-    "oracle_snapshots" -> s"""
-      SELECT id AS event_id,
-             '0xp' || CAST(pool_id AS STRING) AS key_hash,
-             '0xt' || CAST(pool_id % 5 AS STRING) AS token0,
-             '0xt' || CAST(5 + pool_id % 5 AS STRING) AS token1,
-             CAST(seq % 64 AS BIGINT) AS index,
-             btime AS snapshot_block_timestamp,
-             CAST(cents * btime % 1000000007 AS DECIMAL(18,0)) AS snapshot_tick_cumulative
-      FROM ek WHERE bucket = 99 AND user_id % 2 = 0""",
-
-    // liquidity_updated — spline pools (dao.ts:749-763). Zero-liquidity-factor
-    // events are dropped at ingest (eventProcessors.ts:88-93), mirrored here.
-    "liquidity_updated" -> s"""
-      SELECT id AS event_id,
-             '0xp' || CAST(pool_id AS STRING) AS pool_key_hash,
-             '0xa' || CAST(user_id AS STRING) AS sender,
-             CAST(cents AS DECIMAL(18,0)) AS liquidity_factor,
-             CAST(cents * 2 AS DECIMAL(18,0)) AS shares,
-             CAST(cents * 3 AS DECIMAL(18,0)) AS amount0,
-             CAST(cents * 4 AS DECIMAL(18,0)) AS amount1,
-             CAST(CAST(FLOOR(CAST(cents AS DOUBLE) / 100) AS BIGINT) AS DECIMAL(18,0)) AS protocol_fees0,
-             CAST(CAST(FLOOR(CAST(cents AS DOUBLE) / 100) AS BIGINT) AS DECIMAL(18,0)) AS protocol_fees1
-      FROM ek WHERE bucket = 99 AND user_id % 2 = 1 AND user_id % 6 != 0""",
 
     // embeddings_aug: near-dup input = the corpus plus two copies of vector 0
     // under fresh ids. The driver corpus has no cosine ≥ 0.99 pair at any sf,

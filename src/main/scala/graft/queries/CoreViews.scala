@@ -34,6 +34,15 @@ import graft.ingest.Ingest
   * narrow filters and projections per view: at this size the tier costs
   * per job and per generated class, not per row.
   *
+  * Inputs. Over the registered fixtures ([[tier]]) the tagged rows come
+  * from three cached tables, each scanned once: `ek`, of which nine of the
+  * ten sources are filters (one projection tags each row with the table
+  * whose `Fixtures.ekTables` predicate holds and fills the slots from that
+  * table's declared column expressions), `pool_keys`, and `blocks` for the
+  * broadcast. [[tierFrom]] builds the same tier from ten explicit tables,
+  * a union of ten scans: the path for hand-built inputs, and the reference
+  * the one-scan path is tested against.
+  *
   * The reference's trigger-maintained per-tick table (dao.ts:501-647) is
   * replaced by this recompute.
   */
@@ -91,13 +100,85 @@ object CoreViews {
   private val Snapshot = 8
   private val Spline = 9
 
+  /** One source of the tier's tagged union: its tag, its fixture table and
+    * that table in [[Facts]], and the table's columns that fill the tier's
+    * slots. An execution's `t` and `u` come from `blocks` (see [[fromRows]]). */
+  private final case class Source(tag: Int, table: String, of: Facts => DataFrame,
+      columns: (String, String)*)
+
+  private val poolKeys = Source(Pool, "pool_keys", _.pools, "pool_key_hash" -> "key_hash")
+  /** The nine sources that are filters of `ek` (`Fixtures.ekTables`). */
+  private val ekSources = Seq(
+    Source(Swap, "swaps", _.swaps, "pool_key_hash" -> "pool_key_hash", "eid" -> "event_id",
+      "a" -> "sqrt_ratio_after", "t" -> "tick_after", "x" -> "liquidity_after"),
+    Source(Init, "pool_initializations", _.inits, "pool_key_hash" -> "pool_key_hash",
+      "eid" -> "event_id", "a" -> "sqrt_ratio", "t" -> "tick"),
+    Source(Update, "position_updates", _.updates, "pool_key_hash" -> "pool_key_hash",
+      "eid" -> "event_id", "t" -> "lower_bound", "u" -> "upper_bound", "x" -> "liquidity_delta"),
+    Source(Execution, "twamm_virtual_order_executions", _.executions, "pool_key_hash" -> "key_hash",
+      "eid" -> "event_id", "x" -> "token0_sale_rate", "y" -> "token1_sale_rate"),
+    Source(Order, "twamm_order_updates", _.orders, "pool_key_hash" -> "key_hash",
+      "eid" -> "event_id", "t" -> "start_time", "u" -> "end_time", "x" -> "sale_rate_delta0",
+      "y" -> "sale_rate_delta1"),
+    Source(Placed, "limit_order_placed", _.placed, "pool_key_hash" -> "key_hash", "eid" -> "event_id"),
+    Source(Closed, "limit_order_closed", _.closed, "pool_key_hash" -> "key_hash", "eid" -> "event_id"),
+    Source(Snapshot, "oracle_snapshots", _.snapshots, "pool_key_hash" -> "key_hash",
+      "t" -> "snapshot_block_timestamp"),
+    Source(Spline, "liquidity_updated", _.splines, "pool_key_hash" -> "pool_key_hash"))
+
+  // one layout for every source: pool, tag, event id, one DOUBLE, two
+  // BIGINTs and two DECIMALs; a source's unused slots are NULL
+  private val slots = Seq("pool_key_hash" -> StringType, "eid" -> LongType, "a" -> DoubleType,
+    "t" -> LongType, "u" -> LongType, "x" -> dec38, "y" -> dec38)
+
+  private def layout(src: Column)(fill: (String, DataType) => Column): Seq[Column] =
+    src.as("src") +: slots.map { case (n, t) => fill(n, t).cast(t).as(n) }
+
+  /** The rows of one explicit table, tagged and laid out. */
+  private def tagged(s: Source, df: DataFrame): DataFrame =
+    df.select(layout(lit(s.tag))((n, _) => s.columns.toMap.get(n).fold(lit(null))(col)): _*)
+
   /** The memoized tier over the registered fixtures: a localCheckpoint, so
     * every view reads a leaf RDD rather than re-planning the shuffle. */
   def tier(spark: SparkSession, sfDir: String): DataFrame =
     graft.util.Memo.checkpointed(spark, sfDir, "op_tier") {
       Fixtures.register(spark, sfDir)
-      tierFrom(spark, Facts.registered(spark))
+      fixtureTier(spark)
     }
+
+  /** The tier over the registered fixtures, not memoized. It reads three
+    * cached tables, each scanned once: `ek`, `pool_keys` and `blocks`. */
+  private[graft] def fixtureTier(spark: SparkSession): DataFrame =
+    fromRows(spark, fixtureRows(spark), spark.table("blocks"))
+
+  /** The tagged rows of the registered fixtures: `pool_keys`, and one
+    * projection of one scan of `ek` for the nine tables that filter it. The
+    * tag is the first of the nine tables' predicates that holds, and each slot
+    * a `CASE` on the tag over those tables' column expressions, both taken
+    * from the declarations in `Fixtures`. Taking the first predicate gives
+    * each `ek` row to one table, which equals their union because the nine
+    * predicates are disjoint (`bucket` ranges, and the parity of `user_id`
+    * within bucket 99). Rows no table takes are dropped. */
+  private[graft] def fixtureRows(spark: SparkSession): DataFrame = {
+    val declared = ekSources.map(s => s -> Fixtures.ekTable(s.table))
+    val tag = cases(declared.map { case (s, t) => expr(t.where) -> lit(s.tag) })
+    // sources whose column has the same expression share one branch
+    def fill(slot: String, tpe: DataType): Column = {
+      val branches = declared.flatMap { case (s, t) => s.columns.toMap.get(slot).map(c => t.expr(c) -> s.tag) }
+      cases(branches.map(_._1).distinct.map { e =>
+        col("src").isin(branches.collect { case (`e`, g) => g }: _*) -> expr(e).cast(tpe)
+      })
+    }
+    spark.table("ek").select(tag.as("src"), col("*")).filter(col("src").isNotNull)
+      .select(layout(col("src"))(fill): _*)
+      .union(tagged(poolKeys, spark.table("pool_keys")))
+  }
+
+  /** `CASE WHEN c1 THEN v1 WHEN c2 THEN v2 … END`, NULL without branches. */
+  private def cases(branches: Seq[(Column, Column)]): Column =
+    branches.foldLeft(Option.empty[Column]) { case (acc, (c, v)) =>
+      Some(acc.fold(when(c, v))(_.when(c, v)))
+    }.getOrElse(lit(null))
 
   /** The tier over explicit inputs (unit-testable with hand-built frames).
     * Columns: `pool_key_hash`, `kind`, `pos`, `pool`, `s0`, `s1`. At kind 0
@@ -109,39 +190,23 @@ object CoreViews {
     * kind 2 (`pos` a time after the last execution) the net sale-rate
     * changes of token 0 and 1. Keyed rows whose sums cancel out are dropped.
     * The struct keeps the keyed rows narrow in the checkpointed memo. */
-  def tierFrom(spark: SparkSession, f: Facts): DataFrame = {
+  def tierFrom(spark: SparkSession, f: Facts): DataFrame =
+    fromRows(spark, (poolKeys +: ekSources).map(s => tagged(s, s.of(f))).reduce(_ union _), f.blocks)
+
+  /** The tier from its tagged rows: block times for the executions, then
+    * one shuffle by pool. */
+  private def fromRows(spark: SparkSession, input: DataFrame, blocks: DataFrame): DataFrame = {
     import spark.implicits._
 
-    // one layout for every source: pool, tag, event id, one DOUBLE, two
-    // BIGINTs and two DECIMALs; a source's unused slots are NULL
-    val slots = Seq("eid" -> LongType, "a" -> DoubleType, "t" -> LongType, "u" -> LongType,
-      "x" -> dec38, "y" -> dec38)
-    def tagged(df: DataFrame, key: String, src: Int, cols: (String, Column)*): DataFrame = {
-      val named = cols.toMap
-      df.select(col(key).cast(StringType).as("pool_key_hash") +: lit(src).as("src") +:
-        slots.map { case (n, t) => named.getOrElse(n, lit(null)).cast(t).as(n) }: _*)
-    }
-    val blocks = f.blocks.select($"number", $"time")
-    val rows = Seq(
-      tagged(f.pools, "key_hash", Pool),
-      tagged(f.swaps, "pool_key_hash", Swap, "eid" -> $"event_id", "a" -> $"sqrt_ratio_after",
-        "t" -> $"tick_after", "x" -> $"liquidity_after"),
-      tagged(f.inits, "pool_key_hash", Init, "eid" -> $"event_id", "a" -> $"sqrt_ratio",
-        "t" -> $"tick"),
-      tagged(f.updates, "pool_key_hash", Update, "eid" -> $"event_id", "t" -> $"lower_bound",
-        "u" -> $"upper_bound", "x" -> $"liquidity_delta"),
-      // the block's number marks a found block, also one with a NULL time
-      tagged(f.executions.join(broadcast(blocks), Ingest.blockOf($"event_id") === $"number", "left"),
-        "key_hash", Execution, "eid" -> $"event_id", "t" -> $"time", "u" -> $"number",
-        "x" -> $"token0_sale_rate", "y" -> $"token1_sale_rate"),
-      tagged(f.orders, "key_hash", Order, "eid" -> $"event_id", "t" -> $"start_time",
-        "u" -> $"end_time", "x" -> $"sale_rate_delta0", "y" -> $"sale_rate_delta1"),
-      tagged(f.placed, "key_hash", Placed, "eid" -> $"event_id"),
-      tagged(f.closed, "key_hash", Closed, "eid" -> $"event_id"),
-      tagged(f.snapshots, "key_hash", Snapshot, "t" -> $"snapshot_block_timestamp"),
-      tagged(f.splines, "pool_key_hash", Spline)).reduce(_ union _)
-      // one map task per core reads every source's partitions, instead of
-      // one task per partition of each of the ten sources
+    // an execution's block time, and its block's number, which marks a
+    // found block, also one with a NULL time
+    val exec = $"src" === Execution
+    val rows = input
+      .join(broadcast(blocks.select($"number".as("b_number"), $"time".as("b_time"))),
+        when(exec, Ingest.blockOf($"eid")) === $"b_number", "left")
+      .select($"src", $"pool_key_hash", $"eid", $"a", when(exec, $"b_time").otherwise($"t").as("t"),
+        when(exec, $"b_number").otherwise($"u").as("u"), $"x", $"y")
+      // one map task per core reads every source's partitions
       .coalesce(spark.sparkContext.defaultParallelism)
 
     // 1. per pool, what the sums compare against
